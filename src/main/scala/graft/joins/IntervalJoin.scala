@@ -24,7 +24,10 @@ import org.apache.spark.sql.functions._
   * `min_by`/`max_by` hash aggregation for `keep` (map-side partials, no
   * sort). With equality keys Catalyst plans a shuffled hash / sort-merge
   * join with the range conjuncts as post-filter; small sides should be
-  * broadcast by AQE. Keyless joins fall back to BNLJ — see
+  * broadcast by AQE. A keyless inner join whose smaller side fits under
+  * `spark.sql.autoBroadcastJoinThreshold` runs as the sweep against that
+  * side, broadcast and sorted by start (no nested loop); other keyless
+  * joins stay on Catalyst's plan (a nested loop) — see
   * [[BinnedIntervalJoin]] for the scale path.
   *
   * Row order: Spark DataFrames are unordered; when `keepOrder = true` the
@@ -97,9 +100,14 @@ object IntervalJoin {
     *                   enough to broadcast (if one is, Catalyst's
     *                   broadcast hash join avoids shuffling the big
     *                   side at all — better than any shuffled plan) and
-    *                   no explicit binWidth was requested.
-    *                   `Some(true)` forces it (throws if the shape is
-    *                   ineligible); `Some(false)` disables.
+    *                   no explicit binWidth was requested. Also
+    *                   automatic: keyless inner joins with a range
+    *                   whose smaller side IS broadcast-small run the
+    *                   sweep against that side broadcast (`keep` other
+    *                   than `all` only when it is the right side).
+    *                   `Some(true)` forces the keyed sweep (throws if
+    *                   the shape is ineligible); `Some(false)` disables
+    *                   both.
     * @param skewGuard  when the sweep path engages, route it through
     *                   [[SaltedSweepJoin.auto]]: one both-sides stats
     *                   pass detects hot equality keys (threshold derived
@@ -251,31 +259,53 @@ object IntervalJoin {
     require(!sweep.contains(true) || sweepEligible,
       "sweep = Some(true) requires a keyed INNER join of batch frames " +
         "with bounded endpoints (and not the two-point equality shape)")
+    // None when broadcasting is disabled (threshold < 0)
+    lazy val broadcastThreshold: Option[BigInt] = {
+      val confVal = left.sparkSession.conf
+        .get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim
+      if (confVal.startsWith("-")) None
+      else Some(BigInt(org.apache.spark.network.util.JavaUtils
+        .byteStringAsBytes(confVal)))
+    }
+    lazy val lSize = lValid.queryExecution.optimizedPlan.stats.sizeInBytes
+    lazy val rSize = rJoinSide.queryExecution.optimizedPlan.stats.sizeInBytes
     val useSweep = sweep match {
       case Some(b) => b && sweepEligible
-      case None =>
-        sweepEligible && {
-          val confVal = left.sparkSession.conf
-            .get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim
-          // threshold < 0 disables broadcasting: Catalyst must shuffle
-          // either way, so the sweep is strictly better for this shape
-          if (confVal.startsWith("-")) true
-          else {
-            val thresh = org.apache.spark.network.util.JavaUtils
-              .byteStringAsBytes(confVal)
-            val lSize = lValid.queryExecution.optimizedPlan.stats.sizeInBytes
-            val rSize = rJoinSide.queryExecution.optimizedPlan.stats.sizeInBytes
-            lSize.min(rSize) > BigInt(thresh)
-          }
-        }
+      // no broadcasting: Catalyst must shuffle either way, so the sweep
+      // is strictly better for this shape
+      case None => sweepEligible && broadcastThreshold.forall(lSize.min(rSize) > _)
     }
+
+    // Keyless inner joins with a range: Catalyst has no equality to hash
+    // on and plans a nested loop over every pair. When the smaller side
+    // is broadcast-small (the same estimate as above), the sweep runs
+    // against it broadcast and sorted by start, the other side sorted
+    // within its partitions and never shuffled. A missing endpoint is a
+    // closed ±∞ sentinel, so half-unbounded specs qualify; endpoints of
+    // mixed types or of a type without one (decimal, string) keep
+    // Catalyst's plan. Some(true) broadcasts the right
+    // side, Some(false) the left — then the sweep runs with the sides
+    // swapped, which only `keep = all` allows (the sweep decides `keep`
+    // per row of its left side).
+    val keylessBroadcast: Option[Boolean] =
+      if (how != "inner" || lKeys.nonEmpty || !hasRange ||
+          (leftSpec.isPoint && rightSpec.isPoint) || effBinWidth.nonEmpty ||
+          sweep.contains(false) || left.isStreaming || right.isStreaming ||
+          SweepJoin.endpointType(lValid, rJoinSide, leftSpec, rSpecRenamed).isEmpty)
+        None
+      else broadcastThreshold.flatMap { t =>
+        if (rSize <= t && (rSize <= lSize || keep != "all")) Some(true)
+        else if (lSize <= t && keep == "all") Some(false)
+        else None
+      }
 
     // keep=first/last/both on the sweep path is decided INSIDE the sweep
     // (extremes by right row id per left row): output shrinks from the
     // full pair set to ≤ 2·|left| and the min_by/max_by aggregation
     // below — a full-output shuffle — disappears. Only valid when the
     // primary side is the left (how = inner ⊆ sweepEligible).
-    val sweepKeep = useSweep && keep != "all" && effBinWidth.isEmpty
+    val sweepKeep = (useSweep || keylessBroadcast.contains(true)) &&
+      keep != "all" && effBinWidth.isEmpty
     val joined = effBinWidth match {
       case None if useSweep && skewGuard =>
         SaltedSweepJoin.auto(lValid, rJoinSide,
@@ -289,6 +319,13 @@ object IntervalJoin {
           leftSpec, rSpecRenamed, nullSafeKeys = nullSafeKeys,
           keep = if (sweepKeep) keep else "all",
           rightOrderCol = if (sweepKeep) Some(RightId) else None)
+      case None if keylessBroadcast.contains(true) =>
+        SweepJoin(lValid, rJoinSide, Nil, Nil, leftSpec, rSpecRenamed,
+          keep = keep, rightOrderCol = if (sweepKeep) Some(RightId) else None,
+          broadcastRight = true)
+      case None if keylessBroadcast.contains(false) =>
+        SweepJoin(rJoinSide, lValid, Nil, Nil, rSpecRenamed, leftSpec,
+          broadcastRight = true)
       case None => lValid.join(rJoinSide, cond, joinType)
       case Some(w) =>
         require(w > 0, "binWidth must be positive")

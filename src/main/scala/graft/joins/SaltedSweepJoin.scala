@@ -295,8 +295,8 @@ object SaltedSweepJoin {
       s"key lists must align: $leftOn vs $rightOn")
     require(leftSpec.start.isDefined && leftSpec.stop.isDefined &&
       rightSpec.start.isDefined && rightSpec.stop.isDefined,
-      "SaltedSweepJoin needs bounded intervals on both sides, like the " +
-        "sweep it wraps (use IntervalJoin for one-sided/±∞ specs)")
+      "SaltedSweepJoin needs bounded intervals on both sides: its slices " +
+        "are cut from both endpoints (use IntervalJoin for one-sided/±∞ specs)")
   }
 
   // endpoint → double metric for slice arithmetic only (the join

@@ -1,7 +1,9 @@
 package graft.joins
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.graft.{IntervalSweepJoin, IntervalSweepStrategy}
+import org.apache.spark.sql.types._
 
 import graft.core.IntervalSpec
 
@@ -33,9 +35,14 @@ object SweepJoin {
     * Keys empty = keyless sweep: every row pair considered — the
     * physical plan collapses both sides to ONE partition, which is the
     * correct semantics but not a scale path; use keys (or the binned
-    * join) for large keyless workloads.
-    */
-  /** @param nullSafeKeys true = `<=>` key semantics (null keys match
+    * join) for large keyless workloads, or `broadcastRight` when the
+    * right side is small.
+    *
+    * A missing endpoint (half-unbounded spec) becomes a closed ±∞
+    * sentinel of the endpoint type; every endpoint column must then
+    * share one integral, floating, date or timestamp type.
+    *
+    * @param nullSafeKeys true = `<=>` key semantics (null keys match
     *                     each other); false = `===` (null-keyed rows
     *                     never match)
     * @param keep         all | first | last | both: per LEFT row keep all
@@ -44,21 +51,27 @@ object SweepJoin {
     *                     post-join aggregation shuffle)
     * @param rightOrderCol right column defining "first"/"last" (required
     *                     for non-`all` keep; typically a unique row id)
+    * @param broadcastRight broadcast `right` to every partition of `left`
+    *                     instead of shuffling both sides (`right` must be
+    *                     small)
     */
   def apply(left: DataFrame, right: DataFrame,
             leftOn: Seq[String], rightOn: Seq[String],
             leftSpec: IntervalSpec, rightSpec: IntervalSpec,
             nullSafeKeys: Boolean = false,
             keep: String = "all",
-            rightOrderCol: Option[String] = None): DataFrame = {
+            rightOrderCol: Option[String] = None,
+            broadcastRight: Boolean = false): DataFrame = {
     require(leftOn.length == rightOn.length,
       s"key lists must align: $leftOn vs $rightOn")
     require(keep == "all" || rightOrderCol.isDefined,
       "keep=first/last/both requires rightOrderCol")
-    require(leftSpec.start.isDefined && leftSpec.stop.isDefined &&
-      rightSpec.start.isDefined && rightSpec.stop.isDefined,
-      "SweepJoin needs bounded intervals on both sides (use IntervalJoin " +
-        "for one-sided/±∞ specs)")
+    // closed ±∞ stand-ins, built only when an endpoint is missing
+    lazy val (lo, hi) = endpointType(left, right, leftSpec, rightSpec)
+      .map { dt => val (a, b) = sentinels(dt).get; (Literal(a, dt), Literal(b, dt)) }
+      .getOrElse(throw new IllegalArgumentException(
+        "a missing endpoint needs every endpoint column to share one " +
+          "integral, floating, date or timestamp type"))
     // same ingress convention as IntervalJoin: empty intervals (start >
     // stop under the closedness, NaN/null endpoints) never match
     val lValid = left.filter(graft.core.Intervals.nonEmpty(left, leftSpec))
@@ -77,16 +90,49 @@ object SweepJoin {
       plan.output.find(a => resolver(a.name, name)).getOrElse(
         throw new IllegalArgumentException(
           s"column $name not found in ${plan.output.map(_.name)}"))
+    def start(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+              c: Option[String]) = c.map(attr(plan, _)).getOrElse(lo)
+    def stop(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+             c: Option[String]) = c.map(attr(plan, _)).getOrElse(hi)
     val node = IntervalSweepJoin(
       lPlan, rPlan,
       leftOn.map(attr(lPlan, _)), rightOn.map(attr(rPlan, _)),
-      attr(lPlan, leftSpec.start.get), attr(lPlan, leftSpec.stop.get),
-      attr(rPlan, rightSpec.start.get), attr(rPlan, rightSpec.stop.get),
-      leftSpec.includeStart, leftSpec.includeStop,
-      rightSpec.includeStart, rightSpec.includeStop,
+      start(lPlan, leftSpec.start), stop(lPlan, leftSpec.stop),
+      start(rPlan, rightSpec.start), stop(rPlan, rightSpec.stop),
+      // a sentinel is closed: every value of the type passes it
+      leftSpec.includeStart || leftSpec.start.isEmpty,
+      leftSpec.includeStop || leftSpec.stop.isEmpty,
+      rightSpec.includeStart || rightSpec.start.isEmpty,
+      rightSpec.includeStop || rightSpec.stop.isEmpty,
       matchNullKeys = nullSafeKeys,
       keep = keep,
-      rightOrder = rightOrderCol.map(attr(rPlan, _)))
+      rightOrder = rightOrderCol.map(attr(rPlan, _)),
+      broadcastRight = broadcastRight)
     org.apache.spark.sql.graft.SweepPlanBuilder.ofRows(spark, node)
+  }
+
+  /** Closed (lowest, highest) stand-ins for a missing endpoint: every
+    * non-null, non-NaN value of the type lies between them, inclusive. */
+  private def sentinels(dt: DataType): Option[(Any, Any)] = dt match {
+    case ByteType => Some((Byte.MinValue, Byte.MaxValue))
+    case ShortType => Some((Short.MinValue, Short.MaxValue))
+    case IntegerType | DateType => Some((Int.MinValue, Int.MaxValue))
+    case LongType | TimestampType | TimestampNTZType =>
+      Some((Long.MinValue, Long.MaxValue))
+    case FloatType => Some((Float.NegativeInfinity, Float.PositiveInfinity))
+    case DoubleType => Some((Double.NegativeInfinity, Double.PositiveInfinity))
+    case _ => None
+  }
+
+  /** The type all endpoint columns of the two specs share, if it has
+    * ±∞ sentinels. */
+  private[joins] def endpointType(left: DataFrame, right: DataFrame,
+                   leftSpec: IntervalSpec, rightSpec: IntervalSpec): Option[DataType] = {
+    val types = (leftSpec.start ++ leftSpec.stop).map(left.schema(_).dataType) ++
+      (rightSpec.start ++ rightSpec.stop).map(right.schema(_).dataType)
+    types.toSeq.distinct match {
+      case Seq(dt) if sentinels(dt).isDefined => Some(dt)
+      case _ => None
+    }
   }
 }

@@ -4,20 +4,25 @@
 // private[sql]. This is the "whole-operator" extension rung: where the
 // binned rewrite (graft.plans.BinnedJoinRewrite) re-expresses a range
 // join through EXISTING operators (explode + equi-join), this node owns
-// its physical execution outright — one shuffle and one sort per side,
-// then a partition-local interval sweep with no candidate blowup at all.
+// its physical execution outright — one shuffle and one sort per side (or a
+// broadcast of a small side and no shuffle at all), then a partition-local
+// interval sweep with no candidate blowup at all.
 package org.apache.spark.sql.graft
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, BoundReference, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, GenerateUnsafeRowJoiner}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, BroadcastDistribution, ClusteredDistribution, Distribution, IdentityBroadcastMode, Partitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.{BinaryExecNode, ExternalAppendOnlyUnsafeRowArray, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.execution.metric.SQLMetrics
+import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, ExternalAppendOnlyUnsafeRowArray, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.types._
 
 /** Logical interval-overlap join: rows of `left` carrying interval
   * `[lStart, lEnd]` paired with rows of `right` carrying `[rStart, rEnd]`
@@ -33,6 +38,9 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
   * ≤ 2·|left| — at scale that removes the post-join `min_by`/`max_by`
   * shuffle over the full pair set that a compose-then-aggregate plan
   * pays.
+  *
+  * `broadcastRight` selects the broadcast-build execution of
+  * [[IntervalSweepJoinExec]]: `right` must be small enough to broadcast.
   */
 case class IntervalSweepJoin(
     left: LogicalPlan,
@@ -45,7 +53,8 @@ case class IntervalSweepJoin(
     rClosedStart: Boolean, rClosedEnd: Boolean,
     matchNullKeys: Boolean = false,
     keep: String = "all",
-    rightOrder: Option[Expression] = None) extends BinaryNode {
+    rightOrder: Option[Expression] = None,
+    broadcastRight: Boolean = false) extends BinaryNode {
   require(Seq("all", "first", "last", "both").contains(keep), s"keep=$keep")
   require(keep == "all" || rightOrder.isDefined,
     "keep=first/last/both requires a rightOrder expression")
@@ -75,7 +84,7 @@ object IntervalSweepStrategy extends SparkStrategy {
       IntervalSweepJoinExec(planLater(j.left), planLater(j.right),
         j.leftKeys, j.rightKeys, j.lStart, j.lEnd, j.rStart, j.rEnd,
         j.lClosedStart, j.lClosedEnd, j.rClosedStart, j.rClosedEnd,
-        j.matchNullKeys, j.keep, j.rightOrder) :: Nil
+        j.matchNullKeys, j.keep, j.rightOrder, j.broadcastRight) :: Nil
     case j: AutoSaltedSweepJoin =>
       AutoSaltedSweepDispatchExec(j) :: Nil
     case _ => Nil
@@ -91,6 +100,17 @@ object IntervalSweepStrategy extends SparkStrategy {
   *     degenerates to a single partition — use keys at scale);
   *   - both sides sorted by (keys…, interval start) within partitions.
   *
+  * '''Broadcast build''' (`broadcastRight`): the right side arrives
+  * whole through a broadcast and each task sorts it by (keys…, start)
+  * before the sweep; the left side keeps its partitioning and is only
+  * sorted within partitions. The same sweep then runs once per left
+  * partition — O(|L| + partitions·|R| + output) with no exchange of the
+  * left side, where a keyless join would otherwise be a nested loop over
+  * every pair. This mode also runs inside the left side's whole-stage
+  * codegen. A constant (foldable) endpoint, such as a ±∞ sentinel
+  * standing in for a missing one, is left out of the required orderings.
+  * Both modes drive the same loop, [[SweepCursor]].
+  *
   * The sweep walks the two sorted streams once: right rows enter an
   * active buffer while their start can still precede the current left
   * end, and are evicted once their end falls before the current left
@@ -99,7 +119,7 @@ object IntervalSweepStrategy extends SparkStrategy {
   * the interval-overlap density, NOT by bin width or candidate-pair
   * counts: dense same-key ranges that make the binned equi-join explode
   * (every interval × every touched bin) cost this operator nothing
-  * extra. No broadcast, no bin tuning, no candidate materialization.
+  * extra. No bin tuning, no candidate materialization.
   *
   * '''Memory bound.''' The active set is bounded by overlap density —
   * exactly the quantity a hostile key violates (one key whose right
@@ -140,7 +160,8 @@ case class IntervalSweepJoinExec(
     rClosedStart: Boolean, rClosedEnd: Boolean,
     matchNullKeys: Boolean = false,
     keep: String = "all",
-    rightOrder: Option[Expression] = None) extends BinaryExecNode {
+    rightOrder: Option[Expression] = None,
+    broadcastRight: Boolean = false) extends BinaryExecNode with CodegenSupport {
 
   override def output: Seq[Attribute] = left.output ++ right.output
 
@@ -150,13 +171,15 @@ case class IntervalSweepJoinExec(
       "keys degraded to spillable scan"))
 
   override def requiredChildDistribution: Seq[Distribution] =
-    if (leftKeys.isEmpty) AllTuples :: AllTuples :: Nil
+    if (broadcastRight)
+      UnspecifiedDistribution :: BroadcastDistribution(IdentityBroadcastMode) :: Nil
+    else if (leftKeys.isEmpty) AllTuples :: AllTuples :: Nil
     else ClusteredDistribution(leftKeys) ::
       ClusteredDistribution(rightKeys) :: Nil
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    leftKeys.map(SortOrder(_, Ascending)) :+ SortOrder(lStart, Ascending),
-    rightKeys.map(SortOrder(_, Ascending)) :+ SortOrder(rStart, Ascending))
+    SweepSpec.order(leftKeys, lStart),
+    if (broadcastRight) Nil else SweepSpec.order(rightKeys, rStart))
 
   override def outputPartitioning: Partitioning = left.outputPartitioning
 
@@ -164,249 +187,385 @@ case class IntervalSweepJoinExec(
       newLeft: SparkPlan, newRight: SparkPlan): IntervalSweepJoinExec =
     copy(left = newLeft, right = newRight)
 
-  protected override def doExecute(): RDD[InternalRow] = {
-    val numOutputRows = longMetric("numOutputRows")
-    val degradedKeys = longMetric("degradedKeys")
-    val lOut = left.output
-    val rOut = right.output
-    val lKeyExprs = leftKeys
-    val rKeyExprs = rightKeys
-    val (lsE, leE, rsE, reE) = (lStart, lEnd, rStart, rEnd)
-    val (lcS, lcE, rcS, rcE) = (lClosedStart, lClosedEnd, rClosedStart, rClosedEnd)
-    val nullSafe = matchNullKeys
-    val outAttrs = output
-    val keepMode = keep
-    val rOrderExpr = rightOrder
-    // driver-side conf capture; the closure below runs on executors
+  // driver-side capture of everything a task's cursor needs
+  private def spec: SweepSpec = {
     val maxActive = conf.getConfString("spark.graft.sweep.maxActive",
       (1 << 17).toString).toInt
     require(maxActive > 0, "spark.graft.sweep.maxActive must be positive")
-    val spillRowsThreshold = conf.sortMergeJoinExecBufferSpillThreshold
-    val spillSizeThreshold = conf.sortMergeJoinExecBufferSpillSizeThreshold
+    SweepSpec(left.output, right.output, leftKeys, rightKeys,
+      lStart, lEnd, rStart, rEnd,
+      lClosedStart, lClosedEnd, rClosedStart, rClosedEnd,
+      matchNullKeys, keep, rightOrder, maxActive,
+      conf.sortMergeJoinExecBufferSpillThreshold,
+      conf.sortMergeJoinExecBufferSpillSizeThreshold)
+  }
 
-    left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
-      val lKeyProj = UnsafeProjection.create(lKeyExprs, lOut)
-      val rKeyProj = UnsafeProjection.create(rKeyExprs, rOut)
-      val keyOrd = RowOrdering.createNaturalAscendingOrdering(lKeyExprs.map(_.dataType))
-      val tOrd = TypeUtils.getInterpretedOrdering(lsE.dataType)
-        .asInstanceOf[Ordering[Any]]
-      // ── primitive endpoint fast path ──
-      // The generic kernel pays an interpreted Ordering[Any] dispatch +
-      // boxed compare per endpoint comparison — the single hottest call
-      // site of the operator (2 compares per candidate pair, plus the
-      // eviction and ingestion scans). Every fixed-width endpoint type
-      // maps ORDER-ISOMORPHICALLY onto Long (integral/date/timestamp
-      // directly; float/double via the IEEE-754 total-order bit trick,
-      // which reproduces Spark's sort semantics exactly: -0.0 < 0.0,
-      // every NaN canonicalized above +Inf), so the sweep compares plain
-      // longs and the JIT inlines the whole predicate. Non-primitive
-      // endpoint types (decimal, string…) keep the interpreted path.
-      val toKey: Any => Long = lsE.dataType match {
-        case org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.TimestampType |
-             org.apache.spark.sql.types.TimestampNTZType =>
-          v => v.asInstanceOf[java.lang.Long].longValue()
-        case org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.DateType =>
-          v => v.asInstanceOf[java.lang.Integer].longValue()
-        case org.apache.spark.sql.types.ShortType =>
-          v => v.asInstanceOf[java.lang.Short].longValue()
-        case org.apache.spark.sql.types.ByteType =>
-          v => v.asInstanceOf[java.lang.Byte].longValue()
-        case org.apache.spark.sql.types.DoubleType => v => {
-          val b = java.lang.Double.doubleToLongBits(
-            v.asInstanceOf[java.lang.Double].doubleValue())
-          b ^ ((b >> 63) & 0x7fffffffffffffffL)
-        }
-        case org.apache.spark.sql.types.FloatType => v => {
-          val b = java.lang.Float.floatToIntBits(
-            v.asInstanceOf[java.lang.Float].floatValue())
-          (b ^ ((b >> 31) & 0x7fffffff)).toLong
-        }
-        case _ => null
+  protected override def doExecute(): RDD[InternalRow] = {
+    val s = spec
+    val numOutputRows = longMetric("numOutputRows")
+    val degradedKeys = longMetric("degradedKeys")
+    if (broadcastRight) {
+      val rows = right.executeBroadcast[Array[InternalRow]]()
+      left.execute().mapPartitionsInternal { lIter =>
+        s.join(lIter, s.broadcastCursor(rows, degradedKeys), numOutputRows)
       }
-      val prim = toKey != null
-      val lsB = BindReferences.bindReference(lsE, lOut)
-      val leB = BindReferences.bindReference(leE, lOut)
-      val rsB = BindReferences.bindReference(rsE, rOut)
-      val reB = BindReferences.bindReference(reE, rOut)
-      val rOrdB = rOrderExpr.map(BindReferences.bindReference(_, rOut)).orNull
-      val ordOrd = rOrderExpr.map(e => TypeUtils
-        .getInterpretedOrdering(e.dataType).asInstanceOf[Ordering[Any]]).orNull
-      val rUnsafeProj = UnsafeProjection.create(rOut, rOut)
-      val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-      val joined = new JoinedRow
-      // endpoint compare: primitive long keys when available, else the
-      // interpreted ordering on the boxed values
-      @inline def cmp(aK: Long, a: Any, bK: Long, b: Any): Int =
-        if (prim) java.lang.Long.compare(aK, bK) else tOrd.compare(a, b)
+    } else left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
+      s.join(lIter, s.cursor(rIter, degradedKeys), numOutputRows)
+    }
+  }
 
-      // right lookahead: (key copy, rs, re [+ long sort keys], row copy);
-      // rows are copied once on entry because the child iterator reuses
-      // its UnsafeRow
-      final class REntry(val key: UnsafeRow, val rs: Any, val re: Any,
-                         val rsK: Long, val reK: Long, val row: InternalRow)
-      var rLook: REntry = null
-      def advanceRight(): Unit = {
-        rLook = null
-        while (rLook == null && rIter.hasNext) {
-          val r = rIter.next()
-          val rs = rsB.eval(r)
-          val re = reB.eval(r)
-          val k = rKeyProj(r)
-          if (rs != null && re != null && (nullSafe || !k.anyNull)) {
-            rLook = new REntry(k.copy(), rs, re,
-              if (prim) toKey(rs) else 0L, if (prim) toKey(re) else 0L,
-              r.copy())
+  // Broadcast mode also runs inside the left side's whole-stage codegen,
+  // like a broadcast hash join: the generated code advances the cursor
+  // per left row and hands each partner's columns straight to the
+  // parent, with no joined row built in between.
+  override def supportCodegen: Boolean = broadcastRight
+
+  // Partners are emitted one per `processNext` call, each consumed before
+  // the next is built, so they need no copy — unless the left side
+  // itself emits several rows per input and may not stop between them;
+  // then all partners of a left row are emitted at once, copied.
+  override def needCopyResult: Boolean = left match {
+    case c: CodegenSupport => c.needCopyResult
+    case _ => false
+  }
+
+  override def inputRDDs(): Seq[RDD[InternalRow]] =
+    left.asInstanceOf[CodegenSupport].inputRDDs()
+
+  @transient private var leftRow: String = _
+  @transient private var cursor: String = _
+  @transient private var emit: String = _
+
+  override protected def doProduce(ctx: CodegenContext): String = {
+    val specRef = ctx.addReferenceObj("sweepSpec", spec)
+    val rows = ctx.addReferenceObj("sweepRight",
+      right.executeBroadcast[Array[InternalRow]]())
+    val degradedKeys = metricTerm(ctx, "degradedKeys")
+    cursor = ctx.addMutableState(classOf[SweepCursor].getName, "sweepCursor",
+      v => s"$v = $specRef.broadcastCursor($rows, $degradedKeys);",
+      forceInline = true)
+    leftRow = ctx.addMutableState("InternalRow", "sweepLeftRow", forceInline = true)
+    val numOutput = metricTerm(ctx, "numOutputRows")
+    val rightRow = ctx.freshName("rightRow")
+    def vars(row: String, attrs: Seq[Attribute]): Seq[ExprCode] = {
+      ctx.INPUT_ROW = row
+      ctx.currentVars = null
+      attrs.zipWithIndex.map { case (a, i) =>
+        BoundReference(i, a.dataType, a.nullable).genCode(ctx)
+      }
+    }
+    val outVars = vars(leftRow, left.output) ++ vars(rightRow, right.output)
+    val name = ctx.freshName("sweepEmit")
+    emit = ctx.addNewFunction(name,
+      s"""
+         |private void $name() throws java.io.IOException {
+         |  while ($cursor.hasNextMatch()) {
+         |    InternalRow $rightRow = $cursor.nextMatch();
+         |    $numOutput.add(1);
+         |    ${consume(ctx, outVars)}
+         |    ${if (needCopyResult) "" else "if (shouldStop()) return;"}
+         |  }
+         |}
+       """.stripMargin, inlineToOuterClass = true)
+    // first the partners of the last left row still pending
+    s"""
+       |$emit();
+       |if (shouldStop()) return;
+       |${left.asInstanceOf[CodegenSupport].produce(ctx, this)}
+     """.stripMargin
+  }
+
+  override def doConsume(ctx: CodegenContext, input: Seq[ExprCode],
+      row: ExprCode): String =
+    s"""
+       |${row.code}
+       |$leftRow = ${row.value};
+       |$cursor.advance($leftRow);
+       |$emit();
+     """.stripMargin
+}
+
+/** What a task needs to run the sweep, captured on the driver. */
+private[graft] case class SweepSpec(
+    lOut: Seq[Attribute], rOut: Seq[Attribute],
+    leftKeys: Seq[Expression], rightKeys: Seq[Expression],
+    lStart: Expression, lEnd: Expression,
+    rStart: Expression, rEnd: Expression,
+    lClosedStart: Boolean, lClosedEnd: Boolean,
+    rClosedStart: Boolean, rClosedEnd: Boolean,
+    matchNullKeys: Boolean, keep: String, rightOrder: Option[Expression],
+    maxActive: Int, spillRowsThreshold: Int, spillSizeThreshold: Long) {
+
+  def cursor(rIter: Iterator[InternalRow], degradedKeys: SQLMetric): SweepCursor =
+    new SweepCursor(this, rIter, degradedKeys)
+
+  /** A cursor over the broadcast right side, sorted by (keys…, start)
+    * once for this task. */
+  def broadcastCursor(rows: Broadcast[Array[InternalRow]],
+      degradedKeys: SQLMetric): SweepCursor =
+    cursor(rows.value.sorted(RowOrdering.create(
+      SweepSpec.order(rightKeys, rStart), rOut)).iterator, degradedKeys)
+
+  /** The interpreted output: each left row's bytes followed by each
+    * partner's (one copy per row, no per-field projection). */
+  def join(lIter: Iterator[InternalRow], c: SweepCursor,
+      numOutputRows: SQLMetric): Iterator[InternalRow] = {
+    val lUnsafe = UnsafeProjection.create(lOut, lOut)
+    val joiner = GenerateUnsafeRowJoiner.create(
+      DataTypeUtils.fromAttributes(lOut), DataTypeUtils.fromAttributes(rOut))
+    new Iterator[InternalRow] {
+      private var l: UnsafeRow = _
+      override def hasNext: Boolean = {
+        while (!c.hasNextMatch && lIter.hasNext) {
+          val row = lIter.next()
+          c.advance(row)
+          l = row match {
+            case u: UnsafeRow => u
+            case other => lUnsafe(other)
           }
         }
+        c.hasNextMatch
       }
+      override def next(): InternalRow = {
+        numOutputRows += 1
+        joiner.join(l, c.toUnsafe(c.nextMatch()))
+      }
+    }
+  }
+}
+
+private[graft] object SweepSpec {
+  /** The order the sweep walks a side in: (keys…, interval start),
+    * without constants such as a ±∞ sentinel endpoint. */
+  def order(keys: Seq[Expression], start: Expression): Seq[SortOrder] =
+    (keys :+ start).filterNot(_.foldable).map(SortOrder(_, Ascending))
+}
+
+/** One partition's sweep over a right stream sorted by (keys…, start).
+  * [[advance]] takes the next left row, in the same order, and positions
+  * the cursor on that row's partners after `keep`; [[hasNextMatch]] /
+  * [[nextMatch]] walk them. The interpreted and the generated execution
+  * both drive this one loop.
+  */
+private[graft] final class SweepCursor(spec: SweepSpec, rIter: Iterator[InternalRow],
+    degradedKeys: SQLMetric) {
+  import spec._
+
+  private val lKeyProj = UnsafeProjection.create(leftKeys, lOut)
+  private val rKeyProj = UnsafeProjection.create(rightKeys, rOut)
+  private val keyOrd = RowOrdering.createNaturalAscendingOrdering(leftKeys.map(_.dataType))
+  private val tOrd = TypeUtils.getInterpretedOrdering(lStart.dataType)
+    .asInstanceOf[Ordering[Any]]
+  // ── primitive endpoint fast path ──
+  // The generic kernel pays an interpreted Ordering[Any] dispatch +
+  // boxed compare per endpoint comparison — the single hottest call
+  // site of the operator (2 compares per candidate pair, plus the
+  // eviction and ingestion scans). Every fixed-width endpoint type
+  // maps ORDER-ISOMORPHICALLY onto Long (integral/date/timestamp
+  // directly; float/double via the IEEE-754 total-order bit trick,
+  // which reproduces Spark's sort semantics exactly: every NaN
+  // canonicalized above +Inf), so the sweep compares plain
+  // longs and the JIT inlines the whole predicate. Adding +0.0 first
+  // folds -0.0 into 0.0, which Spark compares as equal. Non-primitive
+  // endpoint types (decimal, string…) keep the interpreted path.
+  private val toKey: Any => Long = lStart.dataType match {
+    case LongType | TimestampType | TimestampNTZType =>
+      v => v.asInstanceOf[java.lang.Long].longValue()
+    case IntegerType | DateType =>
+      v => v.asInstanceOf[java.lang.Integer].longValue()
+    case ShortType => v => v.asInstanceOf[java.lang.Short].longValue()
+    case ByteType => v => v.asInstanceOf[java.lang.Byte].longValue()
+    case DoubleType => v => {
+      val b = java.lang.Double.doubleToLongBits(
+        v.asInstanceOf[java.lang.Double].doubleValue() + 0.0)
+      b ^ ((b >> 63) & 0x7fffffffffffffffL)
+    }
+    case FloatType => v => {
+      val b = java.lang.Float.floatToIntBits(
+        v.asInstanceOf[java.lang.Float].floatValue() + 0.0f)
+      (b ^ ((b >> 31) & 0x7fffffff)).toLong
+    }
+    case _ => null
+  }
+  private val prim = toKey != null
+  private val lsB = BindReferences.bindReference(lStart, lOut)
+  private val leB = BindReferences.bindReference(lEnd, lOut)
+  private val rsB = BindReferences.bindReference(rStart, rOut)
+  private val reB = BindReferences.bindReference(rEnd, rOut)
+  private val rOrdB = rightOrder.map(BindReferences.bindReference(_, rOut)).orNull
+  private val ordOrd = rightOrder.map(e => TypeUtils
+    .getInterpretedOrdering(e.dataType).asInstanceOf[Ordering[Any]]).orNull
+  private val rUnsafeProj = UnsafeProjection.create(rOut, rOut)
+  // endpoint compare: primitive long keys when available, else the
+  // interpreted ordering on the boxed values
+  @inline private def cmp(aK: Long, a: Any, bK: Long, b: Any): Int =
+    if (prim) java.lang.Long.compare(aK, bK) else tOrd.compare(a, b)
+
+  // right lookahead: (key copy, rs, re [+ long sort keys], row copy);
+  // rows are copied once on entry because the child iterator reuses
+  // its UnsafeRow
+  private final class REntry(val key: UnsafeRow, val rs: Any, val re: Any,
+                             val rsK: Long, val reK: Long, val row: InternalRow)
+  private var rLook: REntry = null
+  private def advanceRight(): Unit = {
+    rLook = null
+    while (rLook == null && rIter.hasNext) {
+      val r = rIter.next()
+      val rs = rsB.eval(r)
+      val re = reB.eval(r)
+      val k = rKeyProj(r)
+      if (rs != null && re != null && (matchNullKeys || !k.anyNull)) {
+        rLook = new REntry(k.copy(), rs, re,
+          if (prim) toKey(rs) else 0L, if (prim) toKey(re) else 0L,
+          r.copy())
+      }
+    }
+  }
+  advanceRight()
+
+  private val active = new ArrayBuffer[REntry]
+  // the current left row's partners, walked by `pos` (refilled by each
+  // advance, so the hot loop allocates nothing per row)
+  private val matchBuf = new ArrayBuffer[InternalRow]
+  private var pos = 0
+  // degraded keep=all: the partners stream from the spill buffer instead
+  private var spillMatches: Iterator[InternalRow] = null
+  private var curKey: UnsafeRow = null
+  // degraded mode: the current key's right rows live in a spillable
+  // array instead of the evicting in-memory buffer (see scaladoc)
+  private var degraded = false
+  private var spillBuf: ExternalAppendOnlyUnsafeRowArray = null
+
+  def toUnsafe(r: InternalRow): UnsafeRow = r match {
+    case u: UnsafeRow => u
+    case other => rUnsafeProj(other)
+  }
+  private def ingest(e: REntry): Unit = {
+    if (degraded) {
+      spillBuf.add(toUnsafe(e.row)) // add() copies
+    } else {
+      active += e
+      if (active.length > maxActive) {
+        degradedKeys += 1
+        if (spillBuf == null) {
+          spillBuf = new ExternalAppendOnlyUnsafeRowArray(
+            maxActive, 64L * 1024 * 1024,
+            spillRowsThreshold, spillSizeThreshold)
+        }
+        active.foreach(a => spillBuf.add(toUnsafe(a.row)))
+        active.clear()
+        degraded = true
+      }
+    }
+  }
+
+  private def overlapsRaw(ls: Any, le: Any, rs: Any, re: Any): Boolean = {
+    val c1 = tOrd.compare(rs, le)
+    val startOk = c1 < 0 || (c1 == 0 && lClosedEnd && rClosedStart)
+    if (!startOk) return false
+    val c2 = tOrd.compare(ls, re)
+    c2 < 0 || (c2 == 0 && lClosedStart && rClosedEnd)
+  }
+
+  // fused evict + match: ONE compacting walk over the active buffer per
+  // left row (the previous form paid a full eviction scan plus a full
+  // match scan). Eviction is the monotone rule unchanged: left starts
+  // ascend within the key, so an entry whose end precedes this start
+  // can never match again. Matches land in the reusable buffer — the
+  // walk must complete before emission because it also compacts.
+  private def evictAndMatch(lsK: Long, ls: Any, leK: Long, le: Any): Unit = {
+    val n = active.length
+    var i = 0
+    var w = 0
+    while (i < n) {
+      val e = active(i)
+      if (cmp(e.reK, e.re, lsK, ls) >= 0) { // survives eviction
+        if (w != i) active(w) = e
+        w += 1
+        val c1 = cmp(e.rsK, e.rs, leK, le)
+        if (c1 < 0 || (c1 == 0 && lClosedEnd && rClosedStart)) {
+          val c2 = cmp(lsK, ls, e.reK, e.re)
+          if (c2 < 0 || (c2 == 0 && lClosedStart && rClosedEnd)) matchBuf += e.row
+        }
+      }
+      i += 1
+    }
+    if (w < n) active.dropRightInPlace(n - w)
+  }
+
+  def hasNextMatch: Boolean =
+    if (spillMatches != null) spillMatches.hasNext else pos < matchBuf.length
+
+  def nextMatch(): InternalRow =
+    if (spillMatches != null) spillMatches.next()
+    else { pos += 1; matchBuf(pos - 1) }
+
+  /** Positions the cursor on the partners of `l`, the next left row. */
+  def advance(l: InternalRow): Unit = {
+    matchBuf.clear()
+    pos = 0
+    spillMatches = null
+    val ls = lsB.eval(l)
+    val le = leB.eval(l)
+    val lk = lKeyProj(l)
+    if (ls == null || le == null || (!matchNullKeys && lk.anyNull)) return
+    val lsK = if (prim) toKey(ls) else 0L
+    val leK = if (prim) toKey(le) else 0L
+    // key-change check: UnsafeRow byte equality short-circuits the
+    // common same-key case; only a byte mismatch (new key, or a
+    // logically-equal value with different bits, e.g. 0.0 / -0.0)
+    // pays the full interpreted compare
+    if (curKey == null ||
+        (!curKey.equals(lk) && keyOrd.compare(curKey, lk) != 0)) {
+      active.clear()
+      if (degraded) { spillBuf.clear(); degraded = false }
+      curKey = lk.copy()
+    }
+    while (rLook != null && keyOrd.compare(rLook.key, curKey) < 0) {
       advanceRight()
-
-      val active = new ArrayBuffer[REntry]
-      // reusable per-left-row match list (consumed fully by flatMap
-      // before the next left row is processed — Iterator.flatMap
-      // contract), so the hot loop allocates nothing per row
-      val matchBuf = new ArrayBuffer[InternalRow]
-      var curKey: UnsafeRow = null
-      // degraded mode: the current key's right rows live in a spillable
-      // array instead of the evicting in-memory buffer (see scaladoc)
-      var degraded = false
-      var spillBuf: ExternalAppendOnlyUnsafeRowArray = null
-
-      def toUnsafe(r: InternalRow): UnsafeRow = r match {
-        case u: UnsafeRow => u
-        case other => rUnsafeProj(other)
+    }
+    while (rLook != null && keyOrd.compare(rLook.key, curKey) == 0 &&
+        cmp(rLook.rsK, rLook.rs, leK, le) <= 0) {
+      ingest(rLook)
+      advanceRight()
+    }
+    // degraded: the partners stream from the spill buffer (rows may be
+    // reused buffers — keep-extremes copy on update)
+    def spilled: Iterator[InternalRow] =
+      spillBuf.generateIterator().filter { r =>
+        overlapsRaw(ls, le, rsB.eval(r), reB.eval(r))
       }
-      def ingest(e: REntry): Unit = {
-        if (degraded) {
-          spillBuf.add(toUnsafe(e.row)) // add() copies
-        } else {
-          active += e
-          if (active.length > maxActive) {
-            degradedKeys += 1
-            if (spillBuf == null) {
-              spillBuf = new ExternalAppendOnlyUnsafeRowArray(
-                maxActive, 64L * 1024 * 1024,
-                spillRowsThreshold, spillSizeThreshold)
-            }
-            active.foreach(a => spillBuf.add(toUnsafe(a.row)))
-            active.clear()
-            degraded = true
-          }
+    if (!degraded) evictAndMatch(lsK, ls, leK, le)
+    if (keep == "all") {
+      if (degraded) spillMatches = spilled
+    } else {
+      // first/last by rightOrder, evaluated sweep-side: one pass
+      // over the matches, ≤ 2 output rows per left row
+      var firstRow: InternalRow = null; var firstOrd: Any = null
+      var lastRow: InternalRow = null; var lastOrd: Any = null
+      val needFirst = keep != "last"
+      val needLast = keep != "first"
+      (if (degraded) spilled else matchBuf.iterator).foreach { r0 =>
+        var r = r0
+        var ov = rOrdB.eval(r)
+        if (needFirst && (firstRow == null || ordOrd.compare(ov, firstOrd) < 0)) {
+          if (degraded) { r = r0.copy(); ov = rOrdB.eval(r) }
+          firstRow = r; firstOrd = ov
+        }
+        if (needLast && (lastRow == null || ordOrd.compare(ov, lastOrd) > 0)) {
+          if (degraded && (r eq r0)) { r = r0.copy(); ov = rOrdB.eval(r) }
+          lastRow = r; lastOrd = ov
         }
       }
-
-      def overlapsRaw(ls: Any, le: Any, rs: Any, re: Any): Boolean = {
-        val c1 = tOrd.compare(rs, le)
-        val startOk = c1 < 0 || (c1 == 0 && lcE && rcS)
-        if (!startOk) return false
-        val c2 = tOrd.compare(ls, re)
-        c2 < 0 || (c2 == 0 && lcS && rcE)
-      }
-
-      lIter.flatMap { l =>
-        val ls = lsB.eval(l)
-        val le = leB.eval(l)
-        val lk = lKeyProj(l)
-        if (ls == null || le == null || (!nullSafe && lk.anyNull)) Iterator.empty
-        else {
-          val lsK = if (prim) toKey(ls) else 0L
-          val leK = if (prim) toKey(le) else 0L
-          // key-change check: UnsafeRow byte equality short-circuits the
-          // common same-key case; only a byte mismatch (new key, or a
-          // logically-equal value with different bits, e.g. 0.0 / -0.0)
-          // pays the full interpreted compare
-          if (curKey == null ||
-              (!curKey.equals(lk) && keyOrd.compare(curKey, lk) != 0)) {
-            active.clear()
-            if (degraded) { spillBuf.clear(); degraded = false }
-            curKey = lk.copy()
+      matchBuf.clear()
+      keep match {
+        case "first" => if (firstRow != null) matchBuf += firstRow
+        case "last" => if (lastRow != null) matchBuf += lastRow
+        case _ => // both: dedup when first == last (merging.py:736-739)
+          if (firstRow != null) {
+            matchBuf += firstRow
+            if (ordOrd.compare(firstOrd, lastOrd) != 0) matchBuf += lastRow
           }
-          while (rLook != null && keyOrd.compare(rLook.key, curKey) < 0) {
-            advanceRight()
-          }
-          while (rLook != null && keyOrd.compare(rLook.key, curKey) == 0 &&
-              cmp(rLook.rsK, rLook.rs, leK, le) <= 0) {
-            ingest(rLook)
-            advanceRight()
-          }
-          // matching right rows for this left row (rows may be reused
-          // buffers in degraded mode — keep-extremes copy on update)
-          def matches: Iterator[InternalRow] =
-            if (degraded) {
-              spillBuf.generateIterator().filter { r =>
-                overlapsRaw(ls, le, rsB.eval(r), reB.eval(r))
-              }
-            } else {
-              // fused evict + match: ONE compacting walk over the active
-              // buffer per left row (the previous form paid a full
-              // eviction scan plus a full match scan). Eviction is the
-              // monotone rule unchanged: left starts ascend within the
-              // key, so an entry whose end precedes this start can never
-              // match again. Matches land in the reusable buffer — the
-              // walk must complete before emission because it also
-              // compacts.
-              matchBuf.clear()
-              val n = active.length
-              var i = 0
-              var w = 0
-              while (i < n) {
-                val e = active(i)
-                if (cmp(e.reK, e.re, lsK, ls) >= 0) { // survives eviction
-                  if (w != i) active(w) = e
-                  w += 1
-                  val c1 = cmp(e.rsK, e.rs, leK, le)
-                  if (c1 < 0 || (c1 == 0 && lcE && rcS)) {
-                    val c2 = cmp(lsK, ls, e.reK, e.re)
-                    if (c2 < 0 || (c2 == 0 && lcS && rcE)) matchBuf += e.row
-                  }
-                }
-                i += 1
-              }
-              if (w < n) active.dropRightInPlace(n - w)
-              matchBuf.iterator
-            }
-          if (keepMode == "all") {
-            matches.map { r =>
-              numOutputRows += 1
-              resultProj(joined(l, r))
-            }
-          } else {
-            // first/last by rightOrder, evaluated sweep-side: one pass
-            // over the matches, ≤ 2 output rows per left row
-            var firstRow: InternalRow = null; var firstOrd: Any = null
-            var lastRow: InternalRow = null; var lastOrd: Any = null
-            val needFirst = keepMode != "last"
-            val needLast = keepMode != "first"
-            matches.foreach { r0 =>
-              var r = r0
-              var ov = rOrdB.eval(r)
-              if (needFirst && (firstRow == null || ordOrd.compare(ov, firstOrd) < 0)) {
-                if (degraded) { r = r0.copy(); ov = rOrdB.eval(r) }
-                firstRow = r; firstOrd = ov
-              }
-              if (needLast && (lastRow == null || ordOrd.compare(ov, lastOrd) > 0)) {
-                if (degraded && (r eq r0)) { r = r0.copy(); ov = rOrdB.eval(r) }
-                lastRow = r; lastOrd = ov
-              }
-            }
-            val out = keepMode match {
-              case "first" =>
-                if (firstRow == null) Iterator.empty else Iterator(firstRow)
-              case "last" =>
-                if (lastRow == null) Iterator.empty else Iterator(lastRow)
-              case _ => // both: dedup when first == last (merging.py:736-739)
-                if (firstRow == null) Iterator.empty
-                else if (ordOrd.compare(firstOrd, lastOrd) == 0) Iterator(firstRow)
-                else Iterator(firstRow, lastRow)
-            }
-            out.map { r =>
-              numOutputRows += 1
-              resultProj(joined(l, r))
-            }
-          }
-        }
       }
     }
   }

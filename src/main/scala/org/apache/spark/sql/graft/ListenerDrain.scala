@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graft
 
+import java.util.concurrent.TimeoutException
+
 import org.apache.spark.SparkContext
 
 /** `SparkContext.listenerBus` is `private[spark]`; the dev Profile tool
@@ -10,7 +12,15 @@ import org.apache.spark.SparkContext
   */
 object ListenerDrain {
   /** Block until the listener bus has delivered every queued event, or
-    * `timeoutMillis` elapsed. */
+    * `timeoutMillis` elapsed. A timeout is not fatal: it prints a
+    * warning that counts taken from the listener may be incomplete, and
+    * the caller carries on. */
   def waitUntilEmpty(sc: SparkContext, timeoutMillis: Long): Unit =
-    sc.listenerBus.waitUntilEmpty(timeoutMillis)
+    try sc.listenerBus.waitUntilEmpty(timeoutMillis)
+    catch {
+      case e: TimeoutException =>
+        System.err.println(s"[profile] WARN listener bus not drained after " +
+          s"$timeoutMillis ms (${e.getMessage}); job and stage counts may " +
+          "be incomplete")
+    }
 }

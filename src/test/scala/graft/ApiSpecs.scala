@@ -75,4 +75,17 @@ class ApiSpecs extends SparkSuite {
     assert(cnt(false, true) == 1L)   // (0,5] → t=5 only
     assert(cnt(false, false) == 0L)  // (0,5)
   }
+
+  test("listener drain: a bus that does not empty in time only warns") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
+    val slow = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = Thread.sleep(500)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    try {
+      spark.range(1).count()
+      // returns instead of throwing TimeoutException
+      org.apache.spark.sql.graft.ListenerDrain.waitUntilEmpty(spark.sparkContext, 1)
+    } finally spark.sparkContext.removeSparkListener(slow)
+  }
 }

@@ -193,6 +193,44 @@ class PlanSpecs extends SparkSuite {
     assert(!pj.contains("ExistingRDD"), "joint factorize round-trips through an RDD")
   }
 
+  test("keyless interval join: broadcast-small side feeds the sweep, no nested loop") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graft.IntervalSweepJoinExec
+    val l = spark.range(20000).select(col("id"), (col("id") % 997).cast("double").as("x"))
+    val r = spark.range(2000).select(col("id").as("rid"), (col("id") % 50).cast("double").as("y"))
+    def physical(df: org.apache.spark.sql.DataFrame): SparkPlan =
+      df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+    def keyless = graft.Ops.mergeIntervals(l, r, graft.core.IntervalSpec.point("x"),
+      graft.core.IntervalSpec.unboundedBelow("y"), keepOrder = false)
+
+    val p = physical(keyless)
+    val sweep = p.collect { case j: IntervalSweepJoinExec => j }
+    assert(sweep.size == 1, p)
+    assert(sweep.head.right.isInstanceOf[BroadcastExchangeExec], p)
+    assert(!p.toString.contains("BroadcastNestedLoopJoin"), p)
+    assert(!p.toString.contains("SinglePartition"), p)
+
+    // keyed: Catalyst's broadcast hash join with a post-filter, as before
+    val keyed = physical(graft.Ops.mergeIntervals(
+      l.withColumn("g", col("id") % 7), r.withColumn("g", col("rid") % 7),
+      graft.core.IntervalSpec.point("x"), graft.core.IntervalSpec.unboundedBelow("y"),
+      on = Seq("g"), keepOrder = false)).toString
+    assert(keyed.contains("BroadcastHashJoin") && !keyed.contains("IntervalSweepJoin"), keyed)
+
+    // both sides above the threshold: Catalyst's plan, no sweep
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
+    try {
+      val big = physical(keyless).toString
+      assert(!big.contains("IntervalSweepJoin"), big)
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
   test("no driver query degenerates to cartesian/nested-loop (except by design)") {
     // intended exceptions: q_cross_join IS a cross join; q_ann_topk scores
     // every (query, corpus) pair by design — a broadcast nested loop over

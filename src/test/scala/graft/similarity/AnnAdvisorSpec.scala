@@ -171,6 +171,27 @@ class AnnAdvisorSpec extends SparkSuite {
       single.flatten.toSet)
   }
 
+  test("ivf grid amortization: searchMulti at each nprobe ≡ search at " +
+      "that nprobe — prefix property") {
+    val dcorpus = corpus.withColumn("embedding",
+      col("embedding").cast("array<double>"))
+    val queries = dcorpus.filter(col("vec_id") % 20 === 0)
+    val model = IvfAnn.fit(dcorpus, "vec_id", "embedding", nlist = 8)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id", "cosine", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+    val multi = IvfAnn.searchMulti(dcorpus, queries, "vec_id", "embedding",
+      k = 5, model, nprobes = Seq(1, 2, 4))
+    for (np <- Seq(1, 2, 4)) {
+      val viaGrid = rows(multi.filter(col("nprobe") === np))
+      val direct = rows(IvfAnn.search(dcorpus, queries, "vec_id", "embedding",
+        k = 5, model, nprobe = np))
+      assert(viaGrid.nonEmpty)
+      // probe ranks < np of the 4-probe candidates ≡ probing np cells
+      assert(viaGrid == direct, s"prefix reuse diverged at nprobe=$np")
+    }
+  }
+
   test("impossible floor: chosen is None, the table still reports") {
     val a = AnnAdvisor.advise(corpus, "vec_id", "embedding", k = 5,
       recallFloor = 1.0, nlists = Seq(4), nprobes = Seq(1),

@@ -21,13 +21,23 @@ import subprocess
 import sys
 import tempfile
 
+def driver_mem():
+    """Half of MemTotal clamped to 2-8g, as the tier-1 tests use."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+        return f"{min(8, max(2, kb // 2097152))}g"
+    except (OSError, StopIteration, ValueError):
+        return "2g"
+
 def run_bench(jar, sf, workdir, env_extra):
     env = dict(os.environ)
     env.update(env_extra)
     env["SPARK_GRAFT_SF_DIR"] = sf
-    env.setdefault("SPARK_GRAFT_CPUS", "32")
+    env.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     subprocess.run(
-        ["/opt/spark/bin/spark-submit", "--driver-memory", "100g",
+        ["/opt/spark/bin/spark-submit", "--driver-memory",
+         os.environ.get("SPARK_DRIVER_MEM", driver_mem()),
          "--class", "graft.Bench", jar],
         cwd=workdir, env=env,
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, check=True)
