@@ -2,7 +2,10 @@ package graft.joins
 
 import graft.core.{IntervalSpec, Intervals}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.IntervalSweepJoinExec
 
 /** Interval-overlap join — Spark-native reimplementation of the reference's
   * `merge_intervals` (`/root/reference/catabra_pandas/merging.py:13-508`).
@@ -25,7 +28,8 @@ import org.apache.spark.sql.functions._
   * sort). With equality keys Catalyst plans a shuffled hash / sort-merge
   * join with the range conjuncts as post-filter; small sides should be
   * broadcast by AQE. A keyless inner join whose smaller side fits under
-  * `spark.sql.autoBroadcastJoinThreshold` runs as the sweep against that
+  * `spark.sql.autoBroadcastJoinThreshold` (and under the sweep's
+  * `spark.graft.sweep.maxActive` rows) runs as the sweep against that
   * side, broadcast and sorted by start (no nested loop); other keyless
   * joins stay on Catalyst's plan (a nested loop) — see
   * [[BinnedIntervalJoin]] for the scale path.
@@ -102,9 +106,11 @@ object IntervalJoin {
     *                   side at all — better than any shuffled plan) and
     *                   no explicit binWidth was requested. Also
     *                   automatic: keyless inner joins with a range
-    *                   whose smaller side IS broadcast-small run the
-    *                   sweep against that side broadcast (`keep` other
-    *                   than `all` only when it is the right side).
+    *                   whose smaller side IS broadcast-small (and
+    *                   holds at most `spark.graft.sweep.maxActive`
+    *                   rows) run the sweep against that side broadcast
+    *                   (`keep` other than `all` only when it is the
+    *                   right side).
     *                   `Some(true)` forces the keyed sweep (throws if
     *                   the shape is ineligible); `Some(false)` disables
     *                   both.
@@ -267,8 +273,10 @@ object IntervalJoin {
       else Some(BigInt(org.apache.spark.network.util.JavaUtils
         .byteStringAsBytes(confVal)))
     }
-    lazy val lSize = lValid.queryExecution.optimizedPlan.stats.sizeInBytes
-    lazy val rSize = rJoinSide.queryExecution.optimizedPlan.stats.sizeInBytes
+    lazy val lPlan = lValid.queryExecution.optimizedPlan
+    lazy val rPlan = rJoinSide.queryExecution.optimizedPlan
+    lazy val lSize = lPlan.stats.sizeInBytes
+    lazy val rSize = rPlan.stats.sizeInBytes
     val useSweep = sweep match {
       case Some(b) => b && sweepEligible
       // no broadcasting: Catalyst must shuffle either way, so the sweep
@@ -283,10 +291,14 @@ object IntervalJoin {
     // within its partitions and never shuffled. A missing endpoint is a
     // closed ±∞ sentinel, so half-unbounded specs qualify; endpoints of
     // mixed types or of a type without one (decimal, string) keep
-    // Catalyst's plan. Some(true) broadcasts the right
-    // side, Some(false) the left — then the sweep runs with the sides
-    // swapped, which only `keep = all` allows (the sweep decides `keep`
-    // per row of its left side).
+    // Catalyst's plan. The broadcast side must also hold no more rows
+    // than the sweep's active-set bound (`spark.graft.sweep.maxActive`):
+    // a keyless join has one key, so past the bound the sweep would
+    // degrade to a scan of every pair for good. The row count is the
+    // estimate's, or else its size over the estimated row width.
+    // Some(true) broadcasts the right side, Some(false) the left — then
+    // the sweep runs with the sides swapped, which only `keep = all`
+    // allows (the sweep decides `keep` per row of its left side).
     val keylessBroadcast: Option[Boolean] =
       if (how != "inner" || lKeys.nonEmpty || !hasRange ||
           (leftSpec.isPoint && rightSpec.isPoint) || effBinWidth.nonEmpty ||
@@ -294,8 +306,12 @@ object IntervalJoin {
           SweepJoin.endpointType(lValid, rJoinSide, leftSpec, rSpecRenamed).isEmpty)
         None
       else broadcastThreshold.flatMap { t =>
-        if (rSize <= t && (rSize <= lSize || keep != "all")) Some(true)
-        else if (lSize <= t && keep == "all") Some(false)
+        val maxActive = IntervalSweepJoinExec.maxActive(left.sparkSession.conf.get)
+        def fits(p: LogicalPlan, size: BigInt) = size <= t &&
+          p.stats.rowCount.getOrElse(size / EstimationUtils.getSizePerRow(p.output)) <=
+            maxActive
+        if (fits(rPlan, rSize) && (rSize <= lSize || keep != "all")) Some(true)
+        else if (fits(lPlan, lSize) && keep == "all") Some(false)
         else None
       }
 
@@ -320,12 +336,11 @@ object IntervalJoin {
           keep = if (sweepKeep) keep else "all",
           rightOrderCol = if (sweepKeep) Some(RightId) else None)
       case None if keylessBroadcast.contains(true) =>
-        SweepJoin(lValid, rJoinSide, Nil, Nil, leftSpec, rSpecRenamed,
-          keep = keep, rightOrderCol = if (sweepKeep) Some(RightId) else None,
-          broadcastRight = true)
+        SweepJoin.broadcastRight(lValid, rJoinSide, leftSpec, rSpecRenamed,
+          keep, if (sweepKeep) Some(RightId) else None)
       case None if keylessBroadcast.contains(false) =>
-        SweepJoin(rJoinSide, lValid, Nil, Nil, rSpecRenamed, leftSpec,
-          broadcastRight = true)
+        SweepJoin.broadcastRight(rJoinSide, lValid, rSpecRenamed, leftSpec,
+          "all", None)
       case None => lValid.join(rJoinSide, cond, joinType)
       case Some(w) =>
         require(w > 0, "binWidth must be positive")

@@ -35,8 +35,9 @@ object SweepJoin {
     * Keys empty = keyless sweep: every row pair considered — the
     * physical plan collapses both sides to ONE partition, which is the
     * correct semantics but not a scale path; use keys (or the binned
-    * join) for large keyless workloads, or `broadcastRight` when the
-    * right side is small.
+    * join) for large keyless workloads. ([[IntervalJoin]] runs a
+    * keyless join whose smaller side is broadcast-small against that
+    * side broadcast instead.)
     *
     * A missing endpoint (half-unbounded spec) becomes a closed ±∞
     * sentinel of the endpoint type; every endpoint column must then
@@ -51,17 +52,31 @@ object SweepJoin {
     *                     post-join aggregation shuffle)
     * @param rightOrderCol right column defining "first"/"last" (required
     *                     for non-`all` keep; typically a unique row id)
-    * @param broadcastRight broadcast `right` to every partition of `left`
-    *                     instead of shuffling both sides (`right` must be
-    *                     small)
     */
   def apply(left: DataFrame, right: DataFrame,
             leftOn: Seq[String], rightOn: Seq[String],
             leftSpec: IntervalSpec, rightSpec: IntervalSpec,
             nullSafeKeys: Boolean = false,
             keep: String = "all",
-            rightOrderCol: Option[String] = None,
-            broadcastRight: Boolean = false): DataFrame = {
+            rightOrderCol: Option[String] = None): DataFrame =
+    plan(left, right, leftOn, rightOn, leftSpec, rightSpec, nullSafeKeys,
+      keep, rightOrderCol, broadcast = false)
+
+  /** The keyless sweep with `right` broadcast to every partition of
+    * `left` instead of both sides collapsed to one partition. `right`
+    * must be small: [[IntervalJoin]] decides that from its size
+    * estimate. */
+  private[joins] def broadcastRight(left: DataFrame, right: DataFrame,
+      leftSpec: IntervalSpec, rightSpec: IntervalSpec,
+      keep: String, rightOrderCol: Option[String]): DataFrame =
+    plan(left, right, Nil, Nil, leftSpec, rightSpec, nullSafeKeys = false,
+      keep, rightOrderCol, broadcast = true)
+
+  private def plan(left: DataFrame, right: DataFrame,
+      leftOn: Seq[String], rightOn: Seq[String],
+      leftSpec: IntervalSpec, rightSpec: IntervalSpec,
+      nullSafeKeys: Boolean, keep: String, rightOrderCol: Option[String],
+      broadcast: Boolean): DataFrame = {
     require(leftOn.length == rightOn.length,
       s"key lists must align: $leftOn vs $rightOn")
     require(keep == "all" || rightOrderCol.isDefined,
@@ -107,7 +122,7 @@ object SweepJoin {
       matchNullKeys = nullSafeKeys,
       keep = keep,
       rightOrder = rightOrderCol.map(attr(rPlan, _)),
-      broadcastRight = broadcastRight)
+      broadcastRight = broadcast)
     org.apache.spark.sql.graft.SweepPlanBuilder.ofRows(spark, node)
   }
 

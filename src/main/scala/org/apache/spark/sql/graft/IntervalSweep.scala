@@ -11,16 +11,15 @@ package org.apache.spark.sql.graft
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, BoundReference, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, GenerateUnsafeRowJoiner}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeRowJoiner
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, BroadcastDistribution, ClusteredDistribution, Distribution, IdentityBroadcastMode, Partitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, BroadcastDistribution, BroadcastMode, ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, ExternalAppendOnlyUnsafeRowArray, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{BinaryExecNode, ExternalAppendOnlyUnsafeRowArray, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
 
@@ -101,15 +100,15 @@ object IntervalSweepStrategy extends SparkStrategy {
   *   - both sides sorted by (keys…, interval start) within partitions.
   *
   * '''Broadcast build''' (`broadcastRight`): the right side arrives
-  * whole through a broadcast and each task sorts it by (keys…, start)
-  * before the sweep; the left side keeps its partitioning and is only
-  * sorted within partitions. The same sweep then runs once per left
-  * partition — O(|L| + partitions·|R| + output) with no exchange of the
-  * left side, where a keyless join would otherwise be a nested loop over
-  * every pair. This mode also runs inside the left side's whole-stage
-  * codegen. A constant (foldable) endpoint, such as a ±∞ sentinel
-  * standing in for a missing one, is left out of the required orderings.
-  * Both modes drive the same loop, [[SweepCursor]].
+  * whole through a broadcast, sorted by (keys…, start) once on the
+  * driver ([[SortedBroadcastMode]]); the left side keeps its
+  * partitioning and is only sorted within partitions. The same sweep
+  * then runs once per left partition — O(|L| + partitions·|R| + output)
+  * with no exchange of the left side, where a keyless join would
+  * otherwise be a nested loop over every pair. A constant (foldable)
+  * endpoint, such as a ±∞ sentinel standing in for a missing one, is
+  * left out of the required orderings. Both modes drive the same loop,
+  * [[SweepCursor]].
   *
   * The sweep walks the two sorted streams once: right rows enter an
   * active buffer while their start can still precede the current left
@@ -161,7 +160,7 @@ case class IntervalSweepJoinExec(
     matchNullKeys: Boolean = false,
     keep: String = "all",
     rightOrder: Option[Expression] = None,
-    broadcastRight: Boolean = false) extends BinaryExecNode with CodegenSupport {
+    broadcastRight: Boolean = false) extends BinaryExecNode {
 
   override def output: Seq[Attribute] = left.output ++ right.output
 
@@ -171,8 +170,9 @@ case class IntervalSweepJoinExec(
       "keys degraded to spillable scan"))
 
   override def requiredChildDistribution: Seq[Distribution] =
-    if (broadcastRight)
-      UnspecifiedDistribution :: BroadcastDistribution(IdentityBroadcastMode) :: Nil
+    if (broadcastRight) UnspecifiedDistribution :: BroadcastDistribution(
+      SortedBroadcastMode(BindReferences.bindReferences(
+        SweepSpec.order(rightKeys, rStart), right.output))) :: Nil
     else if (leftKeys.isEmpty) AllTuples :: AllTuples :: Nil
     else ClusteredDistribution(leftKeys) ::
       ClusteredDistribution(rightKeys) :: Nil
@@ -187,102 +187,37 @@ case class IntervalSweepJoinExec(
       newLeft: SparkPlan, newRight: SparkPlan): IntervalSweepJoinExec =
     copy(left = newLeft, right = newRight)
 
-  // driver-side capture of everything a task's cursor needs
-  private def spec: SweepSpec = {
-    val maxActive = conf.getConfString("spark.graft.sweep.maxActive",
-      (1 << 17).toString).toInt
-    require(maxActive > 0, "spark.graft.sweep.maxActive must be positive")
-    SweepSpec(left.output, right.output, leftKeys, rightKeys,
+  protected override def doExecute(): RDD[InternalRow] = {
+    // driver-side capture of everything a task's cursor needs
+    val s = SweepSpec(left.output, right.output, leftKeys, rightKeys,
       lStart, lEnd, rStart, rEnd,
       lClosedStart, lClosedEnd, rClosedStart, rClosedEnd,
-      matchNullKeys, keep, rightOrder, maxActive,
+      matchNullKeys, keep, rightOrder,
+      IntervalSweepJoinExec.maxActive(conf.getConfString),
       conf.sortMergeJoinExecBufferSpillThreshold,
       conf.sortMergeJoinExecBufferSpillSizeThreshold)
-  }
-
-  protected override def doExecute(): RDD[InternalRow] = {
-    val s = spec
     val numOutputRows = longMetric("numOutputRows")
     val degradedKeys = longMetric("degradedKeys")
     if (broadcastRight) {
       val rows = right.executeBroadcast[Array[InternalRow]]()
       left.execute().mapPartitionsInternal { lIter =>
-        s.join(lIter, s.broadcastCursor(rows, degradedKeys), numOutputRows)
+        s.join(lIter, new SweepCursor(s, rows.value.iterator, degradedKeys),
+          numOutputRows)
       }
     } else left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
-      s.join(lIter, s.cursor(rIter, degradedKeys), numOutputRows)
+      s.join(lIter, new SweepCursor(s, rIter, degradedKeys), numOutputRows)
     }
   }
+}
 
-  // Broadcast mode also runs inside the left side's whole-stage codegen,
-  // like a broadcast hash join: the generated code advances the cursor
-  // per left row and hands each partner's columns straight to the
-  // parent, with no joined row built in between.
-  override def supportCodegen: Boolean = broadcastRight
-
-  // Partners are emitted one per `processNext` call, each consumed before
-  // the next is built, so they need no copy — unless the left side
-  // itself emits several rows per input and may not stop between them;
-  // then all partners of a left row are emitted at once, copied.
-  override def needCopyResult: Boolean = left match {
-    case c: CodegenSupport => c.needCopyResult
-    case _ => false
+object IntervalSweepJoinExec {
+  /** In-memory active entries per key past which the sweep degrades to
+    * the spillable scan: `spark.graft.sweep.maxActive`, default 2^17. */
+  def maxActive(get: (String, String) => String): Int = {
+    val n = get("spark.graft.sweep.maxActive", (1 << 17).toString).toInt
+    require(n > 0, "spark.graft.sweep.maxActive must be positive")
+    n
   }
-
-  override def inputRDDs(): Seq[RDD[InternalRow]] =
-    left.asInstanceOf[CodegenSupport].inputRDDs()
-
-  @transient private var leftRow: String = _
-  @transient private var cursor: String = _
-  @transient private var emit: String = _
-
-  override protected def doProduce(ctx: CodegenContext): String = {
-    val specRef = ctx.addReferenceObj("sweepSpec", spec)
-    val rows = ctx.addReferenceObj("sweepRight",
-      right.executeBroadcast[Array[InternalRow]]())
-    val degradedKeys = metricTerm(ctx, "degradedKeys")
-    cursor = ctx.addMutableState(classOf[SweepCursor].getName, "sweepCursor",
-      v => s"$v = $specRef.broadcastCursor($rows, $degradedKeys);",
-      forceInline = true)
-    leftRow = ctx.addMutableState("InternalRow", "sweepLeftRow", forceInline = true)
-    val numOutput = metricTerm(ctx, "numOutputRows")
-    val rightRow = ctx.freshName("rightRow")
-    def vars(row: String, attrs: Seq[Attribute]): Seq[ExprCode] = {
-      ctx.INPUT_ROW = row
-      ctx.currentVars = null
-      attrs.zipWithIndex.map { case (a, i) =>
-        BoundReference(i, a.dataType, a.nullable).genCode(ctx)
-      }
-    }
-    val outVars = vars(leftRow, left.output) ++ vars(rightRow, right.output)
-    val name = ctx.freshName("sweepEmit")
-    emit = ctx.addNewFunction(name,
-      s"""
-         |private void $name() throws java.io.IOException {
-         |  while ($cursor.hasNextMatch()) {
-         |    InternalRow $rightRow = $cursor.nextMatch();
-         |    $numOutput.add(1);
-         |    ${consume(ctx, outVars)}
-         |    ${if (needCopyResult) "" else "if (shouldStop()) return;"}
-         |  }
-         |}
-       """.stripMargin, inlineToOuterClass = true)
-    // first the partners of the last left row still pending
-    s"""
-       |$emit();
-       |if (shouldStop()) return;
-       |${left.asInstanceOf[CodegenSupport].produce(ctx, this)}
-     """.stripMargin
-  }
-
-  override def doConsume(ctx: CodegenContext, input: Seq[ExprCode],
-      row: ExprCode): String =
-    s"""
-       |${row.code}
-       |$leftRow = ${row.value};
-       |$cursor.advance($leftRow);
-       |$emit();
-     """.stripMargin
 }
 
 /** What a task needs to run the sweep, captured on the driver. */
@@ -296,18 +231,8 @@ private[graft] case class SweepSpec(
     matchNullKeys: Boolean, keep: String, rightOrder: Option[Expression],
     maxActive: Int, spillRowsThreshold: Int, spillSizeThreshold: Long) {
 
-  def cursor(rIter: Iterator[InternalRow], degradedKeys: SQLMetric): SweepCursor =
-    new SweepCursor(this, rIter, degradedKeys)
-
-  /** A cursor over the broadcast right side, sorted by (keys…, start)
-    * once for this task. */
-  def broadcastCursor(rows: Broadcast[Array[InternalRow]],
-      degradedKeys: SQLMetric): SweepCursor =
-    cursor(rows.value.sorted(RowOrdering.create(
-      SweepSpec.order(rightKeys, rStart), rOut)).iterator, degradedKeys)
-
-  /** The interpreted output: each left row's bytes followed by each
-    * partner's (one copy per row, no per-field projection). */
+  /** The output: each left row's bytes followed by each partner's (one
+    * copy per row, no per-field projection). */
   def join(lIter: Iterator[InternalRow], c: SweepCursor,
       numOutputRows: SQLMetric): Iterator[InternalRow] = {
     val lUnsafe = UnsafeProjection.create(lOut, lOut)
@@ -341,11 +266,24 @@ private[graft] object SweepSpec {
     (keys :+ start).filterNot(_.foldable).map(SortOrder(_, Ascending))
 }
 
+/** Broadcasts a side's rows as an array sorted by `order` (bound to the
+  * side's output), so the sort runs once on the driver, not in every
+  * task that reads the broadcast. */
+private[graft] case class SortedBroadcastMode(order: Seq[SortOrder])
+    extends BroadcastMode {
+  override def transform(rows: Array[InternalRow]): Array[InternalRow] =
+    rows.sorted(RowOrdering.create(order, Nil))
+  override def transform(rows: Iterator[InternalRow],
+      sizeHint: Option[Long]): Array[InternalRow] = transform(rows.toArray)
+  override def canonicalized: BroadcastMode =
+    copy(order = order.map(_.canonicalized.asInstanceOf[SortOrder]))
+}
+
 /** One partition's sweep over a right stream sorted by (keys…, start).
   * [[advance]] takes the next left row, in the same order, and positions
   * the cursor on that row's partners after `keep`; [[hasNextMatch]] /
-  * [[nextMatch]] walk them. The interpreted and the generated execution
-  * both drive this one loop.
+  * [[nextMatch]] walk them. The shuffle and the broadcast mode both
+  * drive this one loop.
   */
 private[graft] final class SweepCursor(spec: SweepSpec, rIter: Iterator[InternalRow],
     degradedKeys: SQLMetric) {

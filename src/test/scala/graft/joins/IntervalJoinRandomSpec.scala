@@ -193,7 +193,7 @@ class IntervalJoinRandomSpec extends SparkSuite {
     * right id. Returns the matched row count. */
   private def checkKeyless(typ: String, l: DataFrame, r: DataFrame,
       lSpec: IntervalSpec, rSpec: IntervalSpec, keep: String = "all",
-      routed: Boolean = true): Int = {
+      routed: Boolean = true, runMaxActive: Option[Int] = None): Int = {
     def shown(c: String) =
       if (typ == "timestamp" && !c.contains("id")) unix_micros(col(c)) else col(c)
     def rows(df: DataFrame, cols: Seq[String]): Seq[String] =
@@ -203,6 +203,11 @@ class IntervalJoinRandomSpec extends SparkSuite {
       leftIdCol = Some("id"), rightIdCol = Some("id"))
     val plan = got.queryExecution.executedPlan.toString
     assert(plan.contains("IntervalSweepJoin") == routed, plan)
+    // a bound lowered after routing stands for a broadcast side whose row
+    // estimate was too low: the sweep degrades to the spillable scan
+    runMaxActive.foreach(n => spark.conf.set("spark.graft.sweep.maxActive", n.toString))
+    val gotRows = try rows(got, Seq("id_x", "s_x", "e_x", "id_y", "s_y", "e_y"))
+      finally if (runMaxActive.isDefined) spark.conf.unset("spark.graft.sweep.maxActive")
     val plain = l.as("l").join(r.as("r"),
       plainCond(lSpec, rSpec, floating = typ == "double"))
     val pairs = plain.select(col("l.id"), col("r.id")).collect()
@@ -220,7 +225,7 @@ class IntervalJoinRandomSpec extends SparkSuite {
       col("r.id") === col("rid")),
       Seq("l.id", "l.s", "l.e", "r.id", "r.s", "r.e"))
     val ctx = s"type=$typ left=$lSpec right=$rSpec keep=$keep"
-    assert(rows(got, Seq("id_x", "s_x", "e_x", "id_y", "s_y", "e_y")) == want, ctx)
+    assert(gotRows == want, ctx)
     want.size
   }
 
@@ -289,22 +294,25 @@ class IntervalJoinRandomSpec extends SparkSuite {
     // a left side with no start needs no sort, so a left pipeline that
     // emits several rows per input (explode) feeds the sweep directly
     val twice = l.withColumn("twice", explode(array(lit(1), lit(2)))).drop("twice")
-    def each(): Unit = {
+    def each(runMaxActive: Option[Int] = None): Unit = {
       for ((lSpec, rSpec) <- specs; keep <- Seq("all", "first", "last", "both"))
-        checkKeyless("double", l, r, lSpec, rSpec, keep)
+        checkKeyless("double", l, r, lSpec, rSpec, keep, runMaxActive = runMaxActive)
       checkKeyless("double", twice, r, IntervalSpec.unboundedBelow("e"),
-        IntervalSpec.closed("s", "e"), "both")
+        IntervalSpec.closed("s", "e"), "both", runMaxActive = runMaxActive)
     }
     each()
     try {
-      // whole-stage codegen off: the interpreted iterator over the cursor
+      // whole-stage codegen off: the left side reaches the sweep row by row
       spark.conf.set("spark.sql.codegen.wholeStage", "false")
       each()
       // every right row beyond the third moves to the spillable scan
-      spark.conf.set("spark.graft.sweep.maxActive", "3")
-      each()
+      each(runMaxActive = Some(3))
       spark.conf.unset("spark.sql.codegen.wholeStage")
-      each()
+      each(runMaxActive = Some(3))
+      // a broadcast side with more rows than the bound is not routed
+      spark.conf.set("spark.graft.sweep.maxActive", "3")
+      for (keep <- Seq("all", "first"))
+        checkKeyless("double", l, r, specs(1)._1, specs(1)._2, keep, routed = false)
     } finally {
       spark.conf.unset("spark.sql.codegen.wholeStage")
       spark.conf.unset("spark.graft.sweep.maxActive")
