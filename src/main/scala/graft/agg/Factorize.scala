@@ -1,7 +1,7 @@
 package graft.agg
 
-import graft.core.Tables
-import org.apache.spark.sql.DataFrame
+import graft.core.PrefixSum
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Joint dense-integer row encoding — reimplementation of the reference's
@@ -13,12 +13,15 @@ import org.apache.spark.sql.functions._
   * appearance. Nulls are distinct, matchable factors (`misc.py:1166`).
   *
   * Plan: `distinct()` on the key columns (map-side combine shrinks this to
-  * key cardinality), a distributed `orderBy` + dense partition-offset
-  * numbering ([[graft.core.Tables.withRowId]] — per-partition counts
-  * rolled into running offsets, no single-partition window and no RDD
-  * round-trip), then a broadcast-friendly join back. The two-frame
-  * variant unions both key sets so equal rows across frames share codes
-  * (`misc.py:1230-1260`).
+  * key cardinality), then each key's code is a running sum of 1 over the
+  * distinct keys, ordered by the keys or by first appearance
+  * ([[graft.core.PrefixSum]]: one range exchange, one totals job, no
+  * single-partition step and no pin), then a broadcast-friendly join
+  * back. The two-frame variant unions both key sets so equal rows across
+  * frames share codes (`misc.py:1230-1260`); each of its two results
+  * computes the code table again, so with `sort = false` the codes agree
+  * across them when the frames' row order is reproducible (a scan, not
+  * the output of a shuffle).
   */
 object Factorize {
 
@@ -31,16 +34,15 @@ object Factorize {
     attach(df, cols, codes(Seq(df), cols, sort), codeCol)
 
   /** `return_count` form (`misc.py:1140-1143`): the coded frame plus the
-    * number of distinct keys (= the code-table size; one count job over
-    * the already-built distinct frame).
+    * number of distinct keys (one count job over the distinct keys).
     */
   def withCount(
       df: DataFrame,
       cols: Seq[String],
       sort: Boolean = true,
       codeCol: String = "code"): (DataFrame, Long) = {
-    val keyCodes = codes(Seq(df), cols, sort)
-    (attach(df, cols, keyCodes, codeCol), keyCodes.count())
+    val (keyed, order) = distinctKeys(Seq(df), cols, sort)
+    (attach(df, cols, number(keyed, order), codeCol), keyed.count())
   }
 
   /** Joint factorization of two frames over parallel column lists:
@@ -60,32 +62,39 @@ object Factorize {
 
   /** Distinct keys (canonical column names) + dense `__graft_code`. */
   private def codes(frames: Seq[DataFrame], cols: Seq[String], sort: Boolean): DataFrame = {
-    val keyed =
-      if (sort) {
-        frames.map(_.select(cols.map(col): _*)).reduce(_ unionByName _)
-          .distinct()
-          .orderBy(cols.map(c => col(c).asc_nulls_last): _*)
-      } else {
-        // first appearance across the concatenation of all frames, in
-        // order. Ordered by the PAIR (frame index, monotonic id) — packing
-        // both into one long would collide once the partition id reaches
-        // bit 40 (monotonically_increasing_id uses partitionId << 33), so
-        // a struct keeps frame-major order at any partition count
-        frames.map(_.select(cols.map(col): _*))
-          .zipWithIndex
-          .map { case (f, i) =>
-            f.withColumn("__graft_ord",
-              struct(lit(i).as("f"), monotonically_increasing_id().as("m")))
-          }
-          .reduce(_ unionByName _)
-          .groupBy(cols.map(col): _*)
-          .agg(min(col("__graft_ord")).as("__graft_ord"))
-          .orderBy(col("__graft_ord"))
-          .drop("__graft_ord")
-      }
-    // dense numbering in partition-major (= sorted) order, inside Tungsten
-    Tables.withRowId(keyed, "__graft_code")
+    val (keyed, order) = distinctKeys(frames, cols, sort)
+    number(keyed, order)
   }
+
+  /** The distinct keys of all `frames`, and the order that numbers them. */
+  private def distinctKeys(frames: Seq[DataFrame], cols: Seq[String],
+      sort: Boolean): (DataFrame, Seq[Column]) =
+    if (sort) {
+      (frames.map(_.select(cols.map(col): _*)).reduce(_ unionByName _).distinct(),
+        cols.map(c => col(c).asc_nulls_last))
+    } else {
+      // first appearance across the concatenation of all frames, in
+      // order. Ordered by the PAIR (frame index, monotonic id) — packing
+      // both into one long would collide once the partition id reaches
+      // bit 40 (monotonically_increasing_id uses partitionId << 33), so
+      // a struct keeps frame-major order at any partition count
+      (frames.map(_.select(cols.map(col): _*))
+        .zipWithIndex
+        .map { case (f, i) =>
+          f.withColumn("__graft_ord",
+            struct(lit(i).as("f"), monotonically_increasing_id().as("m")))
+        }
+        .reduce(_ unionByName _)
+        .groupBy(cols.map(col): _*)
+        .agg(min(col("__graft_ord")).as("__graft_ord")),
+        Seq(col("__graft_ord")))
+    }
+
+  /** Dense 0-based codes: a running count of the keys in `order`. */
+  private def number(keyed: DataFrame, order: Seq[Column]): DataFrame =
+    PrefixSum.inclusive(keyed, order, lit(1L), "__graft_code")
+      .withColumn("__graft_code", col("__graft_code") - 1)
+      .drop("__graft_ord")
 
   private def attach(
       df: DataFrame, cols: Seq[String], keyCodes: DataFrame, codeCol: String): DataFrame = {

@@ -1,22 +1,25 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RunningSum
 
 /** Scalable ordered prefix sums.
   *
   * `Window.orderBy(...)` with no partition keys moves EVERY row through a
   * single partition — fine on a one-row-per-group frame at bench scale,
-  * a straggler at 1e8 groups. This computes the same running sum in two
-  * parallel phases: range-partition by the key order, per-partition
-  * running sums (a partitioned window), then a per-partition totals
-  * table (#shuffle-partitions rows — the only single-partition step) is
-  * prefix-summed and joined back as an offset.
+  * a straggler at 1e8 groups. This computes the same running sum with
+  * [[org.apache.spark.sql.graft.RunningSumExec]]: one range exchange and
+  * sort on the key order, one job for the per-partition totals, then
+  * each partition adds the totals of the partitions before it to its own
+  * running sum. Nothing passes through a single partition.
   *
-  * Requires `keyCols` to be unique per row (true for the per-group
-  * frames this serves): with duplicate keys the intra-tie order, and
-  * hence the running sum on tied rows, would be nondeterministic.
+  * The result is exactly `sum(value) OVER (ORDER BY keyCols ROWS
+  * UNBOUNDED PRECEDING)`: null values are skipped, and the sum is null
+  * until the first non-null value, whichever partition held it
+  * (floating values agree up to the order of the additions). Requires
+  * `keyCols` to be unique per row (true for the per-group frames this
+  * serves): with duplicate keys the intra-tie order, and hence the
+  * running sum on tied rows, would be nondeterministic.
   */
 object PrefixSum {
 
@@ -27,27 +30,6 @@ object PrefixSum {
       df: DataFrame,
       keyCols: Seq[Column],
       value: Column,
-      outCol: String): DataFrame = {
-    val pid = "__graft_psum_pid"
-    val loc = "__graft_psum_loc"
-    val off = "__graft_psum_off"
-    val tot = "__graft_psum_tot"
-    val v   = "__graft_psum_v"
-    val parts = df
-      .withColumn(v, value)
-      .repartitionByRange(keyCols: _*)
-      .withColumn(pid, spark_partition_id())
-    val wLocal = Window.partitionBy(col(pid)).orderBy(keyCols: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val local = parts.withColumn(loc, sum(col(v)).over(wLocal))
-    // #partitions rows — the single-partition window is bounded by the
-    // shuffle-partition count, not the data
-    val wOff = Window.orderBy(col(pid)).rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy(col(pid)).agg(sum(col(v)).as(tot))
-      .withColumn(off, coalesce(sum(col(tot)).over(wOff), lit(0L)))
-      .drop(tot)
-    local.join(broadcast(offsets), Seq(pid))
-      .withColumn(outCol, col(loc) + col(off))
-      .drop(pid, loc, off, v)
-  }
+      outCol: String): DataFrame =
+    RunningSum(df, keyCols, value, outCol)
 }

@@ -26,45 +26,6 @@ object Tables {
         timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz")))
   }
 
-  /** Attach a stable dense 0-based row id reflecting the DataFrame's
-    * current (partition-major) order — the zipWithIndex contract WITHOUT
-    * leaving Tungsten: stamp `spark_partition_id` +
-    * `monotonically_increasing_id` (whose low 33 bits are the
-    * within-partition position), pin the frame with a lazy
-    * `localCheckpoint` (both stamps are nondeterministic — the offsets
-    * aggregate and the final projection must see the SAME evaluation),
-    * aggregate per-partition counts into running offsets (one tiny
-    * k-partition frame, broadcast back), and compute
-    * `id = offset(partition) + local position`. The pin is a columnar
-    * `persist` (MEMORY_AND_DISK): both consumers read it as an
-    * `InMemoryTableScan`, so — unlike RDD `zipWithIndex` with its
-    * external-Row codec, or a `localCheckpoint` surfacing as an
-    * `ExistingRDD` scan — the plan stays columnar + codegen'd end to
-    * end.
-    */
-  def withRowId(df: DataFrame, idCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pid = "__graft_zw_pid"
-    val mid = "__graft_zw_mid"
-    val stamped = df
-      .withColumn(pid, spark_partition_id())
-      .withColumn(mid, monotonically_increasing_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val offsets = stamped.groupBy(col(pid))
-      .agg(count(lit(1)).as("__graft_zw_cnt"))
-      .withColumn("__graft_zw_off",
-        coalesce(
-          sum(col("__graft_zw_cnt")).over(
-            Window.orderBy(col(pid))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col(pid), col("__graft_zw_off"))
-    stamped.join(broadcast(offsets), Seq(pid))
-      .withColumn(idCol,
-        col("__graft_zw_off") + col(mid).bitwiseAND(lit((1L << 33) - 1)))
-      .drop(pid, mid, "__graft_zw_off")
-  }
-
   /** Cheap non-dense row id that still respects partition-major order.
     * Preferred where ids only need to be *ordered*, not dense (join order
     * contracts, keep=first/last dedup). Stays inside codegen.

@@ -15,12 +15,17 @@ import org.apache.spark.sql.functions._
   * whose correctness argument for the running maximum is at
   * `misc.py:238-246`): per group, sorted by start, a new cluster begins
   * where `start > cummax(previous stops) + distance`. Cluster ids are
-  * globally consecutive in (groupBy, start) order like the reference's.
+  * globally consecutive in (groupBy, start) order like the reference's;
+  * a row with a null group key gets a null id.
   *
-  * Scale: the sweep itself runs in per-group windows (one shuffle). The
-  * global id offsets are computed on a tiny per-group frame (one row per
-  * group) — the only non-partitioned step, linear in the number of groups,
-  * not rows.
+  * Scale: with `groupBy`, the rows are range-partitioned on the group
+  * keys (nulls last) — the one exchange of full rows. The sweep runs in
+  * per-group windows over it, and the global id is a running sum of the
+  * new-cluster flags in (groupBy, start, tieBreakCols, row) order
+  * ([[graft.core.PrefixSum]]), which that same exchange already orders:
+  * one totals job, no per-group offsets frame and no join back. Without
+  * `groupBy` every row is in one ordered window, so the whole input runs
+  * through a single partition.
   */
 object GroupIntervals {
 
@@ -53,32 +58,21 @@ object GroupIntervals {
       else col(startCol) < cm + distance
     val newCluster = when(cm.isNull || !connected, 1L).otherwise(0L)
 
-    val clustered = base
-      .withColumn("__graft_new", newCluster)
-      .withColumn("__graft_local",
-        sum(col("__graft_new")).over(w.rowsBetween(Window.unboundedPreceding, 0)) - 1)
-
     if (groupBy.isEmpty) {
-      clustered.withColumn(outCol, col("__graft_local"))
-        .drop("__graft_new", "__graft_local", rid)
+      base.withColumn("__graft_new", newCluster)
+        .withColumn(outCol,
+          sum(col("__graft_new")).over(w.rowsBetween(Window.unboundedPreceding, 0)) - 1)
+        .drop("__graft_new", rid)
     } else {
-      // per-group cluster counts -> global offsets. One row per group, so
-      // the exclusive prefix sum runs through the scalable two-phase
-      // PrefixSum (a global orderBy window would single-partition 1e8
-      // groups), and the join back is left to Catalyst/AQE (an explicit
-      // broadcast of a per-group frame would OOM at scale)
-      val counts = clustered.groupBy(gb: _*)
-        .agg((max(col("__graft_local")) + 1).as("__graft_n"))
-      val offsets = graft.core.PrefixSum.inclusive(
-          counts, groupBy.map(c => col(c).asc_nulls_last), col("__graft_n"),
-          "__graft_cum")
-        .withColumn("__graft_off", col("__graft_cum") - col("__graft_n"))
-        .drop("__graft_n", "__graft_cum")
-
-      clustered
-        .join(offsets, groupBy, "left")
-        .withColumn(outCol, col("__graft_off") + col("__graft_local"))
-        .drop("__graft_new", "__graft_local", "__graft_off", rid)
+      val keys = groupBy.map(col(_).asc_nulls_last)
+      val flagged = base.repartitionByRange(keys: _*)
+        .withColumn("__graft_new", newCluster)
+      // a row with a null group key gets a null id; its clusters still
+      // take up ids, between the keys sorted before and after it
+      val nullKey = groupBy.map(col(_).isNull).reduce(_ || _)
+      graft.core.PrefixSum.inclusive(flagged, keys ++ ord, col("__graft_new"), outCol)
+        .withColumn(outCol, when(!nullKey, col(outCol) - 1))
+        .drop("__graft_new", rid)
     }
   }
 }

@@ -30,6 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => BinnedJoinRewrite)
     ext.injectOptimizerRule(_ => SweepJoinRewrite)
     ext.injectPlannerStrategy(_ => graft_sweep.IntervalSweepStrategy)
+    ext.injectPlannerStrategy(_ => graft_sweep.RunningSumStrategy)
     GraftFunctions.all.foreach(ext.injectFunction)
   }
 }

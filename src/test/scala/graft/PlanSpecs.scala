@@ -193,23 +193,64 @@ class PlanSpecs extends SparkSuite {
     assert(!pj.contains("ExistingRDD"), "joint factorize round-trips through an RDD")
   }
 
+  /** The plan AQE starts from (the stages it runs are cut from it). */
+  private def initialPlan(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+
+  test("keyed group_intervals: one range exchange of the full rows, on the group keys") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graft.RunningSumExec
+    val df = spark.range(5000).select(col("id"), (col("id") % 40).as("g"),
+      (col("id") * 13 % 700).as("s"))
+    val p = initialPlan(graft.Ops.groupIntervals(df, "s", None, groupBy = Seq("g"),
+      distance = lit(3), tieBreakCols = Seq("id")))
+    val exchanges = p.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, p)
+    exchanges.head.outputPartitioning match {
+      case r: RangePartitioning =>
+        assert(r.ordering.map(_.child.references.map(_.name).toSet) == Seq(Set("g")), p)
+      case other => fail(s"not a range exchange: $other\n$p")
+    }
+    assert(p.collect { case r: RunningSumExec => r }.size == 1, p)
+  }
+
+  test("prefix-sum users never plan a single-partition exchange") {
+    import org.apache.spark.sql.functions._
+    val df = spark.range(5000).select(col("id"), (col("id") % 40).as("g"),
+      (col("id") * 13 % 700).as("s"), (col("id") % 3).cast("string").as("f"))
+    val users = Map(
+      "PrefixSum" -> graft.core.PrefixSum.inclusive(df, Seq(col("s"), col("id")),
+        col("g"), "cum"),
+      "groupIntervals" -> graft.Ops.groupIntervals(df, "s", None, groupBy = Seq("g"),
+        distance = lit(3)),
+      "factorize" -> graft.Ops.factorize(df, Seq("f", "g")),
+      "factorize sort=false" -> graft.Ops.factorize(df, Seq("f", "g"), sort = false),
+      "factorize joint" -> graft.agg.Factorize.joint(df, Seq("f"), df, Seq("g"))._2,
+      "partitionSeries" -> graft.Ops.partitionSeries(df, Seq("g"), budget = 300L),
+      "Packing.chunk" -> graft.text.Packing.chunk(df, Seq(col("s"), col("id")),
+        col("g"), budget = 64L))
+    for ((name, out) <- users) {
+      val p = initialPlan(out).toString
+      assert(p.contains("RunningSum"), s"$name:\n$p")
+      assert(!p.contains("SinglePartition"), s"$name:\n$p")
+    }
+  }
+
   test("keyless interval join: broadcast-small side feeds the sweep, no nested loop") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.graft.IntervalSweepJoinExec
     val l = spark.range(20000).select(col("id"), (col("id") % 997).cast("double").as("x"))
     val r = spark.range(2000).select(col("id").as("rid"), (col("id") % 50).cast("double").as("y"))
-    def physical(df: org.apache.spark.sql.DataFrame): SparkPlan =
-      df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.initialPlan
-        case p => p
-      }
     def keyless = graft.Ops.mergeIntervals(l, r, graft.core.IntervalSpec.point("x"),
       graft.core.IntervalSpec.unboundedBelow("y"), keepOrder = false)
 
-    val p = physical(keyless)
+    val p = initialPlan(keyless)
     val sweep = p.collect { case j: IntervalSweepJoinExec => j }
     assert(sweep.size == 1, p)
     assert(sweep.head.right.isInstanceOf[BroadcastExchangeExec], p)
@@ -217,7 +258,7 @@ class PlanSpecs extends SparkSuite {
     assert(!p.toString.contains("SinglePartition"), p)
 
     // keyed: Catalyst's broadcast hash join with a post-filter, as before
-    val keyed = physical(graft.Ops.mergeIntervals(
+    val keyed = initialPlan(graft.Ops.mergeIntervals(
       l.withColumn("g", col("id") % 7), r.withColumn("g", col("rid") % 7),
       graft.core.IntervalSpec.point("x"), graft.core.IntervalSpec.unboundedBelow("y"),
       on = Seq("g"), keepOrder = false)).toString
@@ -226,7 +267,7 @@ class PlanSpecs extends SparkSuite {
     // both sides above the threshold: Catalyst's plan, no sweep
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
     try {
-      val big = physical(keyless).toString
+      val big = initialPlan(keyless).toString
       assert(!big.contains("IntervalSweepJoin"), big)
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }

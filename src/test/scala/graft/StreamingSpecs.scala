@@ -2,12 +2,11 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.core.PartitionSeries
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Specs for the Structured Streaming variants and partition_series. */
+/** Specs for the Structured Streaming variants. */
 class StreamingSpecs extends SparkSuite {
   import spark.implicits._
 
@@ -717,28 +716,6 @@ class StreamingSpecs extends SparkSuite {
           ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
       assert(streamed == batch)
     } finally q.stop()
-  }
-
-  test("partition_series: greedy packing under budget, oversized groups isolated") {
-    val df = (Seq.fill(5)(1) ++ Seq.fill(3)(2) ++ Seq.fill(12)(3) ++ Seq.fill(4)(4))
-      .map(g => (g, 0)).toDF("g", "x")
-    val out = PartitionSeries(df, Seq("g"), budget = 8)
-      .orderBy("g").collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // cum capped: 5, 8, 16, 20 → pids 0, 0, 1, 2
-    assert(out == Map(1 -> 0L, 2 -> 0L, 3 -> 1L, 4 -> 2L))
-  }
-
-  test("PrefixSum: two-phase running sum ≡ sequential scan on random keys") {
-    val rnd = new scala.util.Random(17)
-    val rows = (0 until 500).map(i => (rnd.nextInt(1000000), i.toLong % 7 + 1))
-      .distinctBy(_._1) // unique keys required by the contract
-    val df = rows.toDF("k", "n").repartition(13)
-    val got = graft.core.PrefixSum.inclusive(df, Seq(col("k")), col("n"), "cum")
-      .orderBy("k").collect().map(r => r.getInt(0) -> r.getLong(2))
-    val want = rows.sortBy(_._1)
-      .scanLeft((0, 0L)) { case ((_, acc), (k, n)) => (k, acc + n) }.drop(1)
-    assert(got.toSeq == want.map { case (k, c) => k -> c })
   }
 
   test("streaming quota sample: admits until quota per stratum, then drops forever") {
