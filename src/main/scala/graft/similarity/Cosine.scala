@@ -130,40 +130,46 @@ object LshAnn {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Dimension of the vector column, probed from the first BOUNDED
-    * batch of non-null rows (fixtures do contain null embeddings;
-    * `Row.getInt` on `size(null)` would NPE if the null happened to
-    * sort first). One tiny job over ≤ 1024 rows — constant per
-    * dataset, NOT a full scan: a ragged vector column would silently
-    * sign other-dimension rows against the wrong hyperplane set, so
-    * the probe asserts min(size) == max(size) over its batch (catches
-    * real raggedness immediately — mixed-model corpora are ragged from
-    * row one), while exhaustive validation past the batch stays the
-    * caller's contract (a per-call full scan of a 100 TB corpus to
-    * re-prove a schema invariant is the wrong trade). Fails loudly
-    * when every row is null: there is no dimension to learn and every
-    * downstream signature would be null.
-    *
-    * Best-effort by design: WHICH rows land in the `limit(1024)` batch
-    * is plan/partition-order dependent, so a corpus whose raggedness
-    * starts past the batch can pass on one run and fail on another —
-    * a flaky raggedness failure here means the DATA is ragged (the
-    * probe's sample moved), not that the data drifted between runs.
+  /** Dimension of the vector column, probed in ONE job with no shuffle:
+    * each partition reports the (min, max) size of its first ≤ 1024
+    * non-null rows (fixtures do contain null embeddings; `size(null)`
+    * has no dimension to report). Constant work per partition, NOT a
+    * full scan: a ragged vector column would silently sign
+    * other-dimension rows against the wrong hyperplane set, so the probe
+    * asserts min(size) == max(size) over every partition's batch
+    * (catches real raggedness immediately — mixed-model corpora are
+    * ragged from row one, and a ragged delta unioned onto a clean one
+    * shows up in its own partitions), while exhaustive validation past
+    * the batches stays the caller's contract (a per-call full scan of a
+    * 100 TB corpus to re-prove a schema invariant is the wrong trade).
+    * Fails loudly when every row is null: there is no dimension to learn
+    * and every downstream signature would be null.
     */
   private def vecDim(df: DataFrame, vecCol: String): Int = {
-    val rows = df.filter(col(vecCol).isNotNull)
-      .select(size(col(vecCol)).as("__sz")).limit(1024)
-      .agg(min(col("__sz")), max(col("__sz"))).head(1)
-    require(rows.nonEmpty && !rows(0).isNullAt(0),
-      s"cannot infer vector dimension: the input has no row with a " +
-        s"non-null '$vecCol' (empty input, or every embedding null)")
-    val (lo, hi) = (rows(0).getInt(0), rows(0).getInt(1))
-    require(lo == hi,
-      s"ragged vector column '$vecCol': sizes $lo..$hi in the probed " +
-        "batch — signatures of mixed-dimension vectors live in " +
-        "different hyperplane spaces; normalize the column first")
+    val spark = df.sparkSession
+    import spark.implicits._
+    val ranges = df.filter(col(vecCol).isNotNull)
+      .select(size(col(vecCol))).as[Int]
+      .mapPartitions { sizes =>
+        val batch = sizes.take(DimProbeRows).toArray
+        if (batch.isEmpty) Iterator.empty else Iterator((batch.min, batch.max))
+      }.collect()
+    require(ranges.nonEmpty, noDimension(vecCol))
+    val (lo, hi) = (ranges.map(_._1).min, ranges.map(_._2).max)
+    require(lo == hi, ragged(vecCol, lo, hi))
     lo
   }
+
+  private val DimProbeRows = 1024
+
+  private def ragged(vecCol: String, lo: Int, hi: Int): String =
+    s"ragged vector column '$vecCol': sizes $lo..$hi in the probed " +
+      "rows — signatures of mixed-dimension vectors live in " +
+      "different hyperplane spaces; normalize the column first"
+
+  private def noDimension(vecCol: String): String =
+    s"cannot infer vector dimension: the input has no row with a " +
+      s"non-null '$vecCol' (empty input, or every embedding null)"
 
   /** Deterministic pseudo-random hyperplane component in [-1, 1) for
     * (table, bit, dimension) — computed DRIVER-side and shipped as
@@ -537,8 +543,8 @@ object LshAnn {
     require(numBits >= 1 && numBits <= 62 && numTables >= 1,
       s"bad shape numBits=$numBits numTables=$numTables")
     val dim = vecDim(delta, vecCol)
-    val healthy =
-      checkIndexMeta(delta.sparkSession, path, numBits, numTables, Some(dim))
+    val healthy = checkIndexMeta(delta.sparkSession, path,
+      readMeta(delta.sparkSession, path), numBits, numTables, dim)
     graft.sources.Layout.appendPartitioned(
       bucketedCorpus(delta, idCol, vecCol, numBits, numTables, dim),
       path, partitionBy = Seq("tbl", "sig"), sortBy = Seq("neighbor_id"))
@@ -559,28 +565,43 @@ object LshAnn {
 
   private val MetaFile = "_graft_lsh_meta.json"
 
-  /** Fails loudly when a [[writeIndex]] sidecar disagrees with the
-    * caller's parameters — numBits, numTables, and (when the caller
-    * knows it: [[appendIndex]]/[[searchIndex]]) the vector DIMENSION,
-    * which parameterizes the hyperplanes just as much as the bit
-    * count. A degraded check (pre-sidecar index with no file, a
-    * pre-dim sidecar, or a corrupt/hand-edited one) passes through —
-    * but WARNS, so the silent near-empty-result failure mode the
+  /** The sidecar's integer fields (`numBits`, `numTables`, `dim`; a
+    * field the file lacks, or a file that does not parse, leaves it
+    * out), or None when the index has no sidecar. */
+  private def readMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[Map[String, Int]] = {
+    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      Some(Seq("numBits", "numTables", "dim").flatMap(k =>
+        s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(txt)
+          .map(m => k -> m.group(1).toInt)).toMap)
+    }
+  }
+
+  /** Fails loudly when a [[writeIndex]] sidecar (as [[readMeta]] parsed
+    * it) disagrees with the caller's parameters — numBits, numTables,
+    * and the vector DIMENSION, which parameterizes the hyperplanes just
+    * as much as the bit count. A degraded check (pre-sidecar index with
+    * no file, a pre-dim sidecar, or a corrupt/hand-edited one) passes
+    * through — but WARNS, so the silent near-empty-result failure mode the
     * sidecar exists to prevent is at least visible in the logs — or
     * FAILS, when the session opts into
     * `spark.graft.lsh.strictIndexMeta=true` (deployments where every
     * index is known to carry a sidecar should refuse degraded checks
     * outright).
     *
-    * @return true when the check ran at full strength for this
-    *         caller's knowledge (parseable sidecar, numBits/numTables
-    *         verified, and dim verified whenever the caller passed
-    *         one); false when any part was degraded — the signal
-    *         [[appendIndex]] uses to self-heal the sidecar after a
-    *         successful append. */
+    * @return true when the check ran at full strength (parseable
+    *         sidecar; numBits, numTables and dim verified); false when
+    *         any part was degraded — the signal [[appendIndex]] uses to
+    *         self-heal the sidecar after a successful append. */
   private def checkIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, numBits: Int, numTables: Int,
-      dim: Option[Int] = None): Boolean = {
+      path: String, meta: Option[Map[String, Int]], numBits: Int,
+      numTables: Int, dim: Int): Boolean = {
     val strict = spark.conf
       .get("spark.graft.lsh.strictIndexMeta", "false").toBoolean
     def degraded(msg: String): Boolean =
@@ -589,51 +610,51 @@ object LshAnn {
           "parameter checks)")
       else { log.warn(msg); false }
     val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      def field(k: String): Option[Int] =
-        s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(txt)
-          .map(_.group(1).toInt)
-      (field("numBits"), field("numTables")) match {
+    meta match {
+      case None => degraded(
+        s"LSH index at $path has no $MetaFile sidecar (pre-sidecar index?) " +
+          "— parameter check SKIPPED; a (numBits, numTables) mismatch " +
+          "would return near-empty results silently")
+      case Some(m) => (m.get("numBits"), m.get("numTables")) match {
         case (Some(b), Some(t)) =>
           require(b == numBits && t == numTables,
             s"index at $path was written with numBits=$b numTables=$t; " +
               s"searched with numBits=$numBits numTables=$numTables — " +
               "signatures live in different spaces")
-          (field("dim"), dim) match {
-            case (Some(d0), Some(d)) =>
-              require(d0 == d,
-                s"index at $path was written over dimension-$d0 vectors; " +
-                  s"this call carries dimension-$d vectors — the " +
-                  "hyperplanes (and so the signatures) differ")
+          m.get("dim") match {
+            case Some(d0) =>
+              require(d0 == dim, dimMismatch(path, d0, dim))
               true
-            case (None, Some(_)) => degraded(
+            case None => degraded(
               s"LSH index sidecar $p predates the dim field — dimension " +
                 "check SKIPPED; a dimension mismatch would land rows in " +
                 "a foreign signature space silently")
-            case _ => true
           }
         case _ => degraded(
           s"LSH index sidecar $p exists but is unparseable — parameter " +
             s"check SKIPPED; a (numBits, numTables) mismatch would return " +
             "near-empty results silently")
       }
-    } else degraded(
-      s"LSH index at $path has no $MetaFile sidecar (pre-sidecar index?) " +
-        "— parameter check SKIPPED; a (numBits, numTables) mismatch " +
-        "would return near-empty results silently")
+    }
   }
 
-  /** Multi-probe top-k over a persisted [[writeIndex]] layout. The probe
-    * (tbl, sig) set is collected (bounded:
-    * |queries| · numTables · (1 + multiProbe) pairs — the query batch is
-    * small by the same contract as [[search]]'s broadcast) and pushed as
-    * a LITERAL partition predicate, so the scan opens only the probed
-    * directories — `PartitionFilters` in the plan, no full-index read
-    * (spec-pinned). Row-identical to [[search]] over the same corpus.
+  private def dimMismatch(path: String, indexDim: Int, callDim: Int): String =
+    s"index at $path was written over dimension-$indexDim vectors; this " +
+      s"call carries dimension-$callDim vectors — the hyperplanes (and so " +
+      "the signatures) differ"
+
+  /** Multi-probe top-k over a persisted [[writeIndex]] layout. The
+    * dimension comes from the sidecar (a pre-dim index probes the
+    * queries instead). The probe frame is collected ONCE (bounded:
+    * |queries| · numTables · (1 + multiProbe) rows — the query batch is
+    * small by the same contract as [[search]]'s broadcast), every row's
+    * vector size is checked against the dimension on the driver, and
+    * the rows feed both sides of the search: their (tbl, sig) set is
+    * pushed as a LITERAL partition predicate, so the scan opens only the
+    * probed directories — `PartitionFilters` in the plan, no full-index
+    * read (spec-pinned) — and a local relation of the same rows is the
+    * broadcast side of the bucket join. Nothing stays pinned.
+    * Row-identical to [[search]] over the same corpus.
     */
   def searchIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -650,22 +671,32 @@ object LshAnn {
     require(k > 0 && numBits >= 1 && numBits <= 62 && numTables >= 1,
       s"bad shape k=$k numBits=$numBits numTables=$numTables")
     checkProbeShape(multiProbe, numBits, probeOrder)
-    val dim = vecDim(queries, vecCol)
-    checkIndexMeta(spark, path, numBits, numTables, Some(dim))
+    val meta = readMeta(spark, path)
+    val indexDim = meta.flatMap(_.get("dim"))
+    val dim = indexDim.getOrElse(vecDim(queries, vecCol))
+    checkIndexMeta(spark, path, meta, numBits, numTables, dim)
     val qprobes = probeFrame(queries, idCol, vecCol,
       numBits, numTables, multiProbe, dim, probeOrder)
-      .localCheckpoint(true) // consumed twice: probe collect + the join
-    // bounded collect, then per-table IN-lists: partition pruning needs
-    // literals at plan time (a join would need runtime DPP; the literal
-    // form is deterministic and visible in PartitionFilters)
-    val probeSet = qprobes.select(col("tbl"), col("sig")).distinct()
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val idx = graft.sources.Layout.read(spark, path)
-    val pred = probeSet.groupBy(_._1).map { case (t, sigs) =>
-      col("tbl") === t && col("sig").isin(sigs.map(_._2).toSeq: _*)
-    }.reduceOption(_ || _).getOrElse(lit(false))
-    rerank(idx.filter(pred).join(broadcast(qprobes), Seq("tbl", "sig")),
-      k, excludeSelf)
+    // (query_id, qv, tbl, sig): a null vector has no signatures, so no
+    // rows means no query with a vector
+    val rows = qprobes.collect()
+    require(rows.nonEmpty, noDimension(vecCol))
+    rows.iterator.map(_.getSeq[Any](1).length).find(_ != dim).foreach { d =>
+      throw new IllegalArgumentException(
+        if (indexDim.isDefined) dimMismatch(path, dim, d)
+        else ragged(vecCol, dim min d, dim max d))
+    }
+    // partition pruning needs literals at plan time (a join would need
+    // runtime DPP; the literal form is deterministic and visible in
+    // PartitionFilters)
+    val pred = rows.map(r => (r.getInt(2), r.getLong(3))).distinct
+      .groupBy(_._1).map { case (t, sigs) =>
+        col("tbl") === t && col("sig").isin(sigs.map(_._2).toSeq: _*)
+      }.reduce(_ || _)
+    val side = spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), qprobes.schema)
+    rerank(graft.sources.Layout.read(spark, path).filter(pred)
+      .join(broadcast(side), Seq("tbl", "sig")), k, excludeSelf)
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Data-layout sink: hive-partitioned, sorted parquet. The reference has
@@ -10,25 +10,41 @@ import org.apache.spark.sql.functions.col
   * even opened), and sorting within files tightens parquet row-group
   * min/max bounds so range predicates skip pages.
   *
-  * Scale posture: `repartition(partitionBy)` gives each output directory
-  * a bounded writer count (without it, every task writes a file into
-  * every partition — the small-files explosion); `sortWithinPartitions`
-  * orders rows inside each writer task, which is exactly the unit parquet
-  * statistics cover. No global sort, no driver involvement.
+  * Scale posture: hash-repartitioning on the partition columns gives
+  * each output directory exactly one writer task (without it, every task
+  * writes a file into every partition — the small-files explosion);
+  * `sortWithinPartitions` orders rows inside each writer task, which is
+  * exactly the unit parquet statistics cover. No global sort, no driver
+  * involvement.
+  *
+  * The repartition takes an explicit count, `spark.sql.shuffle.partitions`
+  * (what a non-adaptive plan uses anyway). A bare `repartition(cols)` lets
+  * AQE coalesce a small shuffle into one task, which then writes every
+  * directory's file in turn — and a partitioned write costs per FILE
+  * (a commit rename and permission calls per file on a local or Hadoop
+  * FS, a PUT and a commit per object on an object store), not per byte.
+  * With a numbered repartition AQE keeps the count, so the directories
+  * spread over all writer tasks; file count and bytes are unchanged.
   */
 object Layout {
+
+  /** The shared repartition → sort → partitioned-writer chain of
+    * [[writePartitioned]], [[appendPartitioned]] and [[compact]]. */
+  private def partitionedWriter(df: DataFrame, partitionBy: Seq[String],
+      sortBy: Seq[String]): DataFrameWriter[Row] = {
+    require(partitionBy.nonEmpty, "need at least one partition column")
+    val writers = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    df.repartition(writers, partitionBy.map(col): _*)
+      .sortWithinPartitions((partitionBy ++ sortBy).map(col): _*)
+      .write
+      .partitionBy(partitionBy: _*)
+  }
 
   /** Writes `df` under `path` partitioned by `partitionBy`, each file
     * sorted by `sortBy`. Overwrites. */
   def writePartitioned(df: DataFrame, path: String,
-                       partitionBy: Seq[String], sortBy: Seq[String]): Unit = {
-    require(partitionBy.nonEmpty, "need at least one partition column")
-    df.repartition(partitionBy.map(col): _*)
-      .sortWithinPartitions((partitionBy ++ sortBy).map(col): _*)
-      .write.mode("overwrite")
-      .partitionBy(partitionBy: _*)
-      .parquet(path)
-  }
+                       partitionBy: Seq[String], sortBy: Seq[String]): Unit =
+    partitionedWriter(df, partitionBy, sortBy).mode("overwrite").parquet(path)
 
   /** Appends to an existing [[writePartitioned]] layout — the index
     * MAINTENANCE path: a continuously-ingesting pipeline encodes each
@@ -42,14 +58,8 @@ object Layout {
     * one writer per touched partition (small-files growth is one file
     * per partition per append — compact periodically at lake scale). */
   def appendPartitioned(df: DataFrame, path: String,
-                        partitionBy: Seq[String], sortBy: Seq[String]): Unit = {
-    require(partitionBy.nonEmpty, "need at least one partition column")
-    df.repartition(partitionBy.map(col): _*)
-      .sortWithinPartitions((partitionBy ++ sortBy).map(col): _*)
-      .write.mode("append")
-      .partitionBy(partitionBy: _*)
-      .parquet(path)
-  }
+                        partitionBy: Seq[String], sortBy: Seq[String]): Unit =
+    partitionedWriter(df, partitionBy, sortBy).mode("append").parquet(path)
 
   /** Reads a [[writePartitioned]] layout back. Predicates on the
     * partition columns prune directories (check `.explain` for
@@ -114,19 +124,12 @@ object Layout {
       values(d).map { case (k, v) => col(k).cast("string") === v }
         .reduce(_ && _)
     }.reduce(_ || _)
-    val frag = spark.read.parquet(path).filter(pred)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      frag.repartition(partitionBy.map(col): _*)
-        .sortWithinPartitions((partitionBy ++ sortBy).map(col): _*)
-        .write.mode("overwrite")
-        .partitionBy(partitionBy: _*)
-        .parquet(path)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // dynamic overwrite as a per-write option: setting the session conf
+    // around the write would leak into concurrent queries of the session
+    partitionedWriter(spark.read.parquet(path).filter(pred), partitionBy, sortBy)
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(path)
     fragmented.map(_.getName)
   }
 

@@ -161,8 +161,14 @@ class BucketingSpecs extends SparkSuite {
       val untouched2 = files(2).map(f => (f.getName, f.lastModified)).toSet
       // threshold 2: cells 0 and 1 (4 files) compact; cell 2 (2 files)
       // and cell 3 (1 file) stay byte-for-byte
+      def overwriteMode =
+        spark.conf.get("spark.sql.sources.partitionOverwriteMode").toLowerCase
+      assert(overwriteMode == "static")
       val compacted = Layout.compact(spark, path,
         partitionBy = Seq("cell"), sortBy = Seq("id"), maxFragments = 2)
+      // dynamic overwrite is the write's own option: the session conf,
+      // which other queries of the session read, is never touched
+      assert(overwriteMode == "static")
       assert(compacted.toSet == Set("cell=0", "cell=1"), compacted.toString)
       assert(files(0).size == 1 && files(1).size == 1)
       assert(files(2).map(f => (f.getName, f.lastModified)).toSet == untouched2)

@@ -20,9 +20,8 @@ class JobBudgetSpec extends SparkSuite {
     element_at(array(lit("A"), lit("N"), lit("R")), (col("id") % 3 + 1).cast("int")).as("flag"),
     when(col("id") % 4 === 0, lit(null)).otherwise(lit("O")).as("status"))
 
-  /** Jobs launched by building and materializing `df`, and the RDDs it
-    * left persisted. */
-  private def measure(df: => DataFrame): (Int, Set[Int]) = {
+  /** Jobs launched by `call`, and the RDDs it left persisted. */
+  private def measure(call: => Unit): (Int, Set[Int]) = {
     val sc = spark.sparkContext
     ListenerDrain.waitUntilEmpty(sc, 10000)
     val before = sc.getPersistentRDDs.keySet
@@ -32,17 +31,22 @@ class JobBudgetSpec extends SparkSuite {
     }
     sc.addSparkListener(listener)
     try {
-      df.queryExecution.toRdd.count()
+      call
       ListenerDrain.waitUntilEmpty(sc, 10000)
     } finally sc.removeSparkListener(listener)
     (jobs.get, (sc.getPersistentRDDs.keySet -- before).toSet)
   }
 
-  private def budget(name: String, cap: Int)(df: => DataFrame): Unit = {
-    val (jobs, pinned) = measure(df)
+  /** Budget for a call that returns `Unit` (a write). */
+  private def budgetCall(name: String, cap: Int)(call: => Unit): Unit = {
+    val (jobs, pinned) = measure(call)
     assert(jobs <= cap, s"$name launched $jobs jobs, budget $cap")
     assert(pinned.isEmpty, s"$name left persisted RDDs $pinned")
   }
+
+  /** Budget for building and materializing `df`. */
+  private def budget(name: String, cap: Int)(df: => DataFrame): Unit =
+    budgetCall(name, cap) { df.queryExecution.toRdd.count(); () }
 
   // each: the range exchange's sample and map jobs, the running sum's
   // totals job and the result, plus the aggregate's map job (factorize,
@@ -58,5 +62,30 @@ class JobBudgetSpec extends SparkSuite {
     budget("partitionSeries", 5)(Ops.partitionSeries(orders, Seq("ckey"), budget = 100L))
     budget("Packing.chunk", 4)(graft.text.Packing.chunk(orders, Seq(col("ckey"), col("okey")),
       col("day") % 17, budget = 64L))
+  }
+
+  // write, append: the dimension probe, the repartition's map job and the
+  // write; compact: the parquet schema read, the repartition's map job
+  // and the write; search: the probe collect, the schema read, the
+  // broadcast of the collected probes, two shuffle map jobs and the result
+  test("LSH index lifecycle: job budgets and no persisted RDD left") {
+    import graft.similarity.LshAnn
+    val corpus = spark.range(400).select(col("id").as("vec_id"),
+      array((0 until 8).map(d =>
+        sin(col("id") * (d + 1) + lit(d))): _*).as("embedding"))
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_budget_lsh").toString + "/idx"
+    budgetCall("writeIndex", 3)(LshAnn.writeIndex(
+      corpus.filter(col("vec_id") % 5 =!= 0), "vec_id", "embedding", path,
+      numBits = 4, numTables = 2))
+    budgetCall("appendIndex", 3)(LshAnn.appendIndex(
+      corpus.filter(col("vec_id") % 5 === 0), "vec_id", "embedding", path,
+      numBits = 4, numTables = 2))
+    budgetCall("compact", 3)(graft.sources.Layout.compact(spark, path,
+      partitionBy = Seq("tbl", "sig"), sortBy = Seq("neighbor_id"),
+      maxFragments = 1))
+    budget("searchIndex", 6)(LshAnn.searchIndex(spark, path,
+      corpus.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
+      numBits = 4, numTables = 2, multiProbe = 2))
   }
 }

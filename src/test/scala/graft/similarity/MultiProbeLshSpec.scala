@@ -254,6 +254,50 @@ class MultiProbeLshSpec extends SparkSuite {
     assert(r.getMessage.contains("ragged"))
   }
 
+  test("searchIndex checks every query's dimension; all-null queries refused") {
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_lshidx_qdim").toString + "/idx"
+    LshAnn.writeIndex(corpus, "vec_id", "embedding", path,
+      numBits = 6, numTables = 2)
+    def search(q: org.apache.spark.sql.DataFrame) = LshAnn.searchIndex(
+      spark, path, q, "vec_id", "embedding", k = 3, numBits = 6,
+      numTables = 2, multiProbe = 2).count()
+    val short = slice(col("embedding"), 1, 8)
+    val wrong = intercept[IllegalArgumentException] {
+      search(queries.withColumn("embedding", short))
+    }
+    assert(wrong.getMessage.contains("dimension"))
+    // one short query among full-width ones: its signatures would live
+    // in a foreign space, so the batch is refused
+    intercept[IllegalArgumentException] {
+      search(queries.withColumn("embedding",
+        when(col("vec_id") === 11, short).otherwise(col("embedding"))))
+    }
+    val nulls = intercept[IllegalArgumentException] {
+      search(queries.withColumn("embedding", lit(null).cast("array<double>")))
+    }
+    assert(nulls.getMessage.contains("cannot infer vector dimension"))
+  }
+
+  test("writeIndex refuses a ragged column whose short vectors sit in a " +
+      "later partition") {
+    // 2000 clean rows fill partition 0 past any single 1024-row batch;
+    // the short vectors are all in partitions 1 and 2 (the sides differ
+    // in partition count, so the union concatenates their partitions)
+    def vectors(from: Long, until: Long, slices: Int, dim: Int) =
+      spark.range(from, until, 1, slices).select(col("id").as("vec_id"),
+        array((0 until dim).map(d => sin(col("id") + d)): _*).as("embedding"))
+    val ragged = vectors(0, 2000, 1, 16).union(vectors(2000, 2010, 2, 8))
+    assert(ragged.rdd.getNumPartitions == 3)
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_lshidx_ragged").toString + "/idx"
+    val e = intercept[IllegalArgumentException] {
+      LshAnn.writeIndex(ragged, "vec_id", "embedding", path,
+        numBits = 4, numTables = 1)
+    }
+    assert(e.getMessage.contains("ragged"))
+  }
+
   test("order-2 probe set follows the scored perturbation sequence") {
     val numBits = 4; val dim = 8
     // chosen so the score ranking INTERLEAVES: the pair {0,1} outranks
