@@ -1,9 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{CheckpointStats, ObservedMetrics}
+import org.apache.spark.sql.graft.Pin
 
 /** Connected components over a near-duplicate pair graph, and cluster
   * assignment for a document corpus.
@@ -80,59 +80,22 @@ object ConnectedComponents {
     //
     // Canonical storage: (lo, hi) with lo < hi, one row per undirected
     // edge (half the rows of the mirrored form the propagate loop
-    // needed). Stats pinned per round via [[CheckpointStats]]: checkpoint
+    // needed), 24 bytes a row on each round's [[Pin]] — checkpoint
     // leaves otherwise inherit the pre-checkpoint plan's size estimate,
     // which an iterative self-referencing loop compounds exponentially
-    // until optimizer stats walks grind on million-bit BigInt products
     // (measured: q_dedup_embcluster seconds → >7 min at sf0.1).
     // Convergence witness: the star fixpoint leaves the edge SET
-    // unchanged; (count, order-free hash sum) detects that exactly.
-    // The witness rides the checkpoint materialization itself as
-    // observed metrics (localCheckpoint runs through withAction, so
-    // `observe` accumulators ARE collected — see [[ObservedMetrics]]):
-    // one job per round, not checkpoint + witness. The expensive
-    // pair-generation pipeline feeding `edges` is evaluated exactly
-    // once, inside the first checkpoint — no separate edge-list
-    // materialization pass.
-    def checkpointWitnessed(df: DataFrame)
-        : (DataFrame, Long, java.math.BigDecimal) = {
-      // The observe ride is an optimization with a known intermittent
-      // failure mode: under heavy load Spark's Observation delivery can
-      // surface a schema-less metrics row, and the resulting NPE
-      // propagates OUT OF the checkpoint job itself (observed at sf1:
-      // "Row.schema() is null" failing q_dedup_cluster after 200 s).
-      // A witness must never be able to fail the round — so the
-      // observed checkpoint gets ONE retry as a plain checkpoint, and
-      // the witness falls back to the explicit aggregation job. A
-      // genuine data/executor failure throws again on the retry and
-      // propagates, as it should.
-      val obs = Observation()
-      val (ck, polled) =
-        try {
-          val c = df.observe(obs, count(lit(1)).as("n"),
-              sum(xxhash64(col("lo"), col("hi")).cast("decimal(38,0)")).as("h"))
-            .localCheckpoint()
-          (c, ObservedMetrics.poll(obs))
-        } catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[cc] witnessed checkpoint failed (${e.getClass.getSimpleName}: " +
-              s"${e.getMessage}); retrying unobserved")
-          (df.localCheckpoint(), None)
-        }
-      val (n, h) = polled match {
-        case Some(m) =>
-          (m("n").asInstanceOf[Long],
-            Option(m("h")).map(_.asInstanceOf[java.math.BigDecimal])
-              .getOrElse(java.math.BigDecimal.ZERO))
-        case None => // listener never delivered — pay the explicit job
-          val r = ck.agg(count(lit(1)),
-            sum(xxhash64(col("lo"), col("hi")).cast("decimal(38,0)"))).head
-          (r.getLong(0),
-            Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
-      }
-      (CheckpointStats.withRowCount(ck, n, 24), n, h)
+    // unchanged; (count, order-free hash sum) detects that exactly, and
+    // both ride the pin's checkpoint job — one job per round. The
+    // expensive pair-generation pipeline feeding `edges` is evaluated
+    // exactly once, inside the first pin.
+    def witnessed(df: DataFrame): (DataFrame, Long, java.math.BigDecimal) = {
+      val p = Pin(df, rowBytes = 24L, metrics = Seq(
+        sum(xxhash64(col("lo"), col("hi")).cast("decimal(38,0)")).as("h")))
+      (p.df, p.rows, Option(p.metrics("h").asInstanceOf[java.math.BigDecimal])
+        .getOrElse(java.math.BigDecimal.ZERO))
     }
-    val (canon0, n0, h0) = checkpointWitnessed(
+    val (canon0, n0, h0) = witnessed(
       e.select(least(col("u"), col("v")).as("lo"),
         greatest(col("u"), col("v")).as("hi")).distinct())
     var canon = canon0
@@ -169,8 +132,8 @@ object ConnectedComponents {
         .union(mS.select(col("m").as("lo"), col("hi")))
         .distinct()
       val old = canon
-      val (c2, n2, h2) = checkpointWitnessed(ss0) // materializes from old
-      CheckpointStats.free(old)
+      val (c2, n2, h2) = witnessed(ss0) // materializes from old
+      Pin.free(old)
       canon = c2
       converged = n2 == 0 || (n2 == prev._1 && h2.compareTo(prev._2) == 0)
       prev = (n2, h2)
@@ -210,7 +173,7 @@ object ConnectedComponents {
       import spark.implicits._
       System.err.println(
         s"[cc] rounds=$iter converged=local localEdges=$nEdges")
-      CheckpointStats.free(canon)
+      Pin.free(canon)
       return out.toSeq.toDF("node", "comp")
     }
     // at the star fixpoint every edge is (componentMin, member); roots

@@ -146,8 +146,8 @@ object MinHashDedup {
     * @param observeDropped when set, attach an `observe` metric of this
     *                    name counting refused buckets to the plan — the
     *                    recall audit as a FREE byproduct of every run
-    *                    (poll with
-    *                    [[org.apache.spark.sql.graft.ObservedMetrics]])
+    *                    (read it from the consuming query's
+    *                    `queryExecution.observedMetrics`)
     *                    instead of a separate [[droppedBuckets]] pass
     * @return pairs `(id_l, id_r, jaccard)` with `id_l < id_r`
     */
@@ -377,7 +377,7 @@ object Buckets {
     // one whose bounded collection hit maxBucket+1, so counting them is
     // an `observe` on rows already flowing through the plan — every run
     // of the consuming query reports its silent-recall loss as a metric
-    // ([[org.apache.spark.sql.graft.ObservedMetrics]] collects it).
+    // (the consuming query's `queryExecution.observedMetrics` holds it).
     // On the count-first fallback the refused keys never reach `grouped`,
     // so the audit stays with [[hotKeys]].
     val grouped = observeDropped match {

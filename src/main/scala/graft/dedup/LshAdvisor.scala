@@ -3,6 +3,7 @@ package graft.dedup
 import graft.text.Shingles
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 
 /** Recall-targeted MinHash-LSH banding advisor — the dedup-side sibling
   * of [[graft.similarity.AnnAdvisor]]: `q_ann_recall` measures and
@@ -102,14 +103,13 @@ object LshAdvisor {
     // substituted in, below the semi join onto the CORPUS side: the
     // only corpus-proportional stage this advisor is allowed is the
     // sample scan itself)
-    val base = corpus.filter(col(textCol).isNotNull)
-    val sampled = graft.sample.Sampling
-      .md5RankPinned(base, idCol, sampleDocs)
-      .select(col(idCol).as("id"), col(textCol).as("__text"))
+    val sample = graft.sample.Sampling.md5RankPinned(
+      corpus.filter(col(textCol).isNotNull), idCol, sampleDocs)
     // distinct shingle strings per sampled doc; docs with no shingles
-    // drop out (nothing to compare) — cached: feeds the exact pair set
+    // drop out (nothing to compare) — pinned: feeds the exact pair set
     // AND the signature computation
-    val grams = sampled
+    val grams = Pin(sample
+      .select(col(idCol).as("id"), col(textCol).as("__text"))
       .select(col("id"), Shingles.tokens(col("__text")).as("tk"))
       // zero-token docs (whitespace-only text) are dropped BEFORE
       // shingling: the sliding-window gram over an empty token array
@@ -121,34 +121,32 @@ object LshAdvisor {
       // non-column input per gram (Shingles.wordNGramsFromTokens doc)
       .select(col("id"),
         Shingles.wordNGramsFromTokens(col("tk"), shingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .cache()
+      .filter(size(col("sh")) > 0)).df
 
     // exact Jaccard pairs at the threshold, via the inverted-index
     // self-join (exact for threshold > 0: a positive-Jaccard pair
-    // shares a shingle). Eagerly pinned — every configuration's hit
-    // count re-reads it.
+    // shares a shingle). Pinned — every configuration's hit count
+    // re-reads it, and the pin's job counts it.
     val posting = grams.select(col("id"), col("sh"),
         explode(col("sh")).as("g"))
       .select(col("id"), col("g"), size(col("sh")).as("n"))
-    val truth = posting.as("a").join(posting.as("b"),
+    val truthPin = Pin(posting.as("a").join(posting.as("b"),
         col("a.g") === col("b.g") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_l"), col("b.id").as("id_r"),
         col("a.n").as("n_l"), col("b.n").as("n_r"))
       .agg(count(lit(1)).as("inter"))
       .filter(col("inter").cast("double") /
         (col("n_l") + col("n_r") - col("inter")) >= threshold)
-      .select(col("id_l"), col("id_r"))
-      .localCheckpoint(true)
-    val truePairs = truth.count()
+      .select(col("id_l"), col("id_r")))
+    val truth = truthPin.df
+    val truePairs = truthPin.rows
 
     // k-minhash signatures over md5-hashed shingles, one array column;
-    // cached — sliced per band configuration
+    // pinned — sliced per band configuration
     val sigExpr = transform(sequence(lit(0), lit(numHashes - 1)),
       i => array_min(transform(col("sh"),
         g => md5Long(concat(i.cast("string"), lit(":"), g)))))
-    val sigs = grams.select(col("id"), sigExpr.as("sig")).cache()
-    sigs.count() // materialize once; per-band plans reuse the cache
+    val sigs = Pin(grams.select(col("id"), sigExpr.as("sig"))).df
 
     // one 1-row leg per band candidate, unioned and collected ONCE: the
     // advisor's cost is job-count-dominated, not data-dominated, and one
@@ -196,8 +194,7 @@ object LshAdvisor {
     val chosen = table.filter(_.recall >= recallFloor)
       .sortBy(m => (m.candidates, -m.recall, m.numBands))
       .headOption
-    grams.unpersist()
-    sigs.unpersist()
+    Seq(sample, grams, truth, sigs).foreach(Pin.free)
     Advice(chosen, table)
   }
 }

@@ -1,9 +1,8 @@
 package graft.graph
 
-
-import org.apache.spark.sql.graft.CheckpointStats
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 
 /** Synchronous label propagation (LPA, Raghavan et al. 2007) with the
   * same determinism contract as [[PageRank]] and
@@ -26,14 +25,14 @@ import org.apache.spark.sql.functions._
   * of possible 2-cycles on bipartite-ish structures; fixed `iters`
   * bounds that.
   *
-  * Scale: the edge list is checkpointed once with pinned stats; each
+  * Scale: the edge list is pinned once ([[Pin]]); each
   * round is one equi-join (labels → edges) + TWO pure hash
   * aggregations (count, then lexicographic max over (count, −label) —
   * both map-side combined, so a Zipf-degree hub partial-aggregates
   * before the shuffle and nothing sorts) + a left join back to the
   * node frame; per-round state is 2 longs per node, freed via
-  * [[CheckpointStats.free]] (localCheckpoint unpersist is a cache-
-  * manager no-op).
+  * [[Pin.free]] (localCheckpoint unpersist is a cache-manager no-op),
+  * as is the edge pin before returning.
   */
 object LabelPropagation {
 
@@ -58,8 +57,7 @@ object LabelPropagation {
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-    val eCk = e.localCheckpoint()
-    val edgeCk = CheckpointStats.withRowCount(eCk, eCk.count(), 16L)
+    val edgeCk = Pin(e, rowBytes = 16L).df
 
     val seeded = nodes.columns.length match {
       case 1 => nodes.select(col(nodes.columns.head).cast("long").as("node"))
@@ -69,9 +67,7 @@ object LabelPropagation {
         col(nodes.columns(1)).cast("long").as("label"))
         .where(col("node").isNotNull)
     }
-    val sCk = seeded.localCheckpoint()
-    val n = sCk.count()
-    var labels = CheckpointStats.withRowCount(sCk, n, 16L)
+    var labels = Pin(seeded, rowBytes = 16L).df
 
     for (_ <- 1 to iters) {
       // in-neighbor label stream → majority with ties to the SMALLEST
@@ -93,9 +89,10 @@ object LabelPropagation {
         .select(col("node"),
           coalesce(col("__new"), col("label")).as("label"))
       val old = labels
-      labels = CheckpointStats.withRowCount(next.localCheckpoint(), n, 16L)
-      CheckpointStats.free(old)
+      labels = Pin(next, rowBytes = 16L).df
+      Pin.free(old)
     }
+    Pin.free(edgeCk)
     labels
   }
 }

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointStats
+import org.apache.spark.sql.graft.Pin
 
 /** Link-graph authority scoring (PageRank) for web-corpus curation:
   * after [[graft.text.UrlOps]] reduces a crawl to a host/domain graph,
@@ -40,11 +40,11 @@ import org.apache.spark.sql.graft.CheckpointStats
   * equi-join of the rank frame (2 longs/node) against the
   * degree-annotated edge list plus a map-side-combinable grouped sum —
   * no windows, AQE-splittable on skewed hubs. The edge list is
-  * checkpointed once with pinned measured stats; the rank frame is
-  * checkpointed per round ([[CheckpointStats]]) so lineage stays flat.
-  * The dangling-mass scalar is a 1-row aggregate broadcast back — the
-  * same bounded-driver-work class as the IVF centroid probe. Node
-  * count `n` is one count job up front.
+  * pinned once with measured stats; the rank frame is pinned per round
+  * ([[Pin]]) so lineage stays flat, and the pins the result does not
+  * read are freed before returning. The dangling-mass scalar is a 1-row
+  * aggregate broadcast back — the same bounded-driver-work class as the
+  * IVF centroid probe. Node count `n` is the universe pin's row count.
   */
 object PageRank {
 
@@ -59,9 +59,11 @@ object PageRank {
     *                  round 1) skip the remaining rounds. Deterministic:
     *                  the delta is an integer sum, identical under any
     *                  partitioning, so every run stops at the same round
-    *                  with bit-identical ranks. Costs one extra count-
-    *                  style job per round; 0 (default) disables it and
-    *                  always runs exactly `iterations` rounds.
+    *                  with bit-identical ranks. Observed on each
+    *                  round's pin (no extra job; the rank frame carries
+    *                  the previous rank, 8 bytes a node); 0 (default)
+    *                  disables it and always runs exactly `iterations`
+    *                  rounds.
     */
   def apply(edges: DataFrame, srcCol: String, dstCol: String,
             iterations: Int = 10,
@@ -112,18 +114,16 @@ object PageRank {
           .union(e.select(col("dst").as("node"))).distinct()
     }
 
-    // one count job: n drives the teleport constant (a scalar, so a
-    // driver value — not a per-row collect)
-    val uCk = universe.localCheckpoint()
-    val n = uCk.count()
+    // n drives the teleport constant (a scalar, so a driver value — not
+    // a per-row collect); it is the universe pin's own row count
+    val uni = Pin(universe, rowBytes = 8L)
+    val (nodeDf, n) = (uni.df, uni.rows)
     require(n > 0, "PageRank needs at least one node")
-    val nodeDf = CheckpointStats.withRowCount(uCk, n, 8L)
 
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // degree-annotated edges: built once (the possibly-expensive edge
-    // pipeline runs inside this one checkpoint), reused every round
-    val eCk = e.join(deg, "src").localCheckpoint()
-    val edgeCk = CheckpointStats.withRowCount(eCk, eCk.count(), 24L)
+    // pipeline runs inside this one pin), reused every round
+    val edgeCk = Pin(e.join(deg, "src"), rowBytes = 24L).df
     // dangling flag folded into the node universe (and carried by every
     // rank frame below): the per-round dangling-mass aggregate is then a
     // filter + sum over the frame already in hand — one join per round
@@ -131,16 +131,20 @@ object PageRank {
     val base = scale / n
     val tele = (100L - dampingPct) * base / 100L
 
-    // the dangling flag and the uniform initial rank land in ONE
-    // checkpointed frame — a separate node-flag checkpoint followed by
-    // the rank-0 checkpoint paid two back-to-back materialization jobs
-    // for the same rows
-    val nCk = nodeDf.join(edgeCk.select(col("src")).distinct(),
+    // the dangling flag and the uniform initial rank land in ONE pinned
+    // frame — a separate node-flag checkpoint followed by the rank-0
+    // checkpoint paid two back-to-back materialization jobs for the
+    // same rows
+    var pr = Pin(nodeDf.join(edgeCk.select(col("src")).distinct(),
         nodeDf("node") === col("src"), "left_outer")
       .select(col("node"), col("src").isNull.as("__dangling"),
-        lit(base).as("rank"))
-      .localCheckpoint()
-    var pr = CheckpointStats.withRowCount(nCk, n, 17L)
+        lit(base).as("rank")), rowBytes = 17L).df
+    // with a tolerance each round's frame also carries the rank it
+    // replaced, so the exact integer L1 delta is an aggregate observed
+    // on the round's own pin — bit-identical under any partitioning, so
+    // the stopping round is deterministic
+    val carry = if (tolerance > 0L) Seq(col("rank").as("__r0")) else Nil
+    val delta = coalesce(sum(abs(col("rank") - col("__r0"))), lit(0L)).as("delta")
     var iter = 0
     var stopped = false
     while (iter < iterations && !stopped) {
@@ -156,24 +160,21 @@ object PageRank {
       val next = pr
         .join(contrib, pr("node") === contrib("dst"), "left")
         .crossJoin(broadcast(dmass))
-        .select(col("node"), col("__dangling"),
+        .select(Seq(col("node"), col("__dangling"),
           (lit(tele) +
             expr(s"$dampingPct * __dm DIV (100 * ${n}L)") +
-            coalesce(col("__contrib"), lit(0L))).as("rank"))
+            coalesce(col("__contrib"), lit(0L))).as("rank")) ++ carry: _*)
       val old = pr
-      pr = CheckpointStats.withRowCount(next.localCheckpoint(), n, 17L)
-      if (tolerance > 0L) {
-        // exact integer L1 delta — bit-identical under any partitioning,
-        // so the stopping round is deterministic
-        val delta = old.select(col("node"), col("rank").as("__r0"))
-          .join(pr.select(col("node"), col("rank").as("__r1")), "node")
-          .agg(coalesce(sum(abs(col("__r1") - col("__r0"))), lit(0L)))
-          .head().getLong(0)
-        if (delta <= tolerance) stopped = true
-      }
-      CheckpointStats.free(old)
+      val p = Pin(next, rowBytes = 17L + 8L * carry.size,
+        metrics = if (carry.isEmpty) Nil else Seq(delta))
+      pr = p.df
+      if (carry.nonEmpty && p.metrics("delta").asInstanceOf[Long] <= tolerance)
+        stopped = true
+      Pin.free(old)
       iter += 1
     }
+    Pin.free(nodeDf)
+    Pin.free(edgeCk)
     (pr.select(col("node"), col("rank")), iter)
   }
 }

@@ -2,6 +2,7 @@ package graft.joins
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
 
 import graft.core.IntervalSpec
@@ -222,17 +223,14 @@ object SaltedSweepJoin {
         max(col("__ss_dgr")).as("__ss_anydgr"))
 
     val parallelism = math.max(1, left.sparkSession.sparkContext.defaultParallelism)
-    // derived threshold needs the totals — fold them into the same
-    // collected (bounded) result via a grand-total accumulator row? No:
-    // totals are two cheap selects on the SAME shuffled stats frame
-    // (reused scan, no extra pass over the data)
-    val statsCk = stats.localCheckpoint()
-    val totals = statsCk
-      .agg(sum("__ss_nl"), sum("__ss_nr"), max("__ss_anydgr")).head()
-    if (!totals.isNullAt(2) && totals.getBoolean(2)) return None
-    val (totL, totR) =
-      (if (totals.isNullAt(0)) 0L else totals.getLong(0),
-        if (totals.isNullAt(1)) 0L else totals.getLong(1))
+    // the side totals and the danger flag ride the pin's own job
+    val pinned = Pin(stats, metrics = Seq(sum("__ss_nl").as("nl"),
+      sum("__ss_nr").as("nr"), max("__ss_anydgr").as("dgr")))
+    val statsCk = pinned.df
+    def total(name: String): Long =
+      Option(pinned.metrics(name)).fold(0L)(_.asInstanceOf[Long])
+    if (pinned.metrics("dgr") == true) { Pin.free(statsCk); return None }
+    val (totL, totR) = (total("nl"), total("nr"))
     val confTarget = left.sparkSession.conf
       .get("spark.graft.skew.targetRowsPerTask", "0").trim.toLong
     val threshold =
@@ -246,10 +244,12 @@ object SaltedSweepJoin {
     require(hotRows.length <= maxHotKeys,
       s"more than $maxHotKeys keys exceed the derived hot threshold " +
         s"$threshold — that is not skew; repartition or raise minHotRows")
-    if (hotRows.isEmpty)
+    if (hotRows.isEmpty) {
+      Pin.free(statsCk)
       return Some(SweepJoin(left, right, leftOn, rightOn, leftSpec,
         rightSpec, nullSafeKeys = nullSafeKeys, keep = keep,
         rightOrderCol = rightOrderCol))
+    }
 
     val hotL = hotRows.map(_.getLong(hotRows.head.fieldIndex("__ss_nl"))).sum
     val hotR = hotRows.map(_.getLong(hotRows.head.fieldIndex("__ss_nr"))).sum

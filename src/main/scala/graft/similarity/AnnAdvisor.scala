@@ -2,6 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 
 /** Recall-targeted CROSS-FAMILY ANN advisor — the decision procedure
   * on top of the recall harness (`q_ann_recall` measures; this PICKS).
@@ -121,11 +122,14 @@ object AnnAdvisor {
       .md5RankPinned(base, idCol, sampleQueries)
 
     // ground truth computed ONCE (≤ sampleQueries·k rows), shared by
-    // every configuration's intersection
-    val exact = CosineTopK(base, queries, idCol, vecCol, k = k)
-      .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint(true)
-    val possible = exact.count()
+    // every configuration's intersection; its row count is the pin's
+    val truth = Pin(CosineTopK(base, queries, idCol, vecCol, k = k)
+      .select(col("query_id"), col("neighbor_id")))
+    val exact = truth.df
+    val possible = truth.rows
+    // every pin is freed once the hits are counted: the advice is plain
+    // values, no frame reads them
+    val pins = scala.collection.mutable.ArrayBuffer(base, queries, exact)
     require(possible > 0, "empty ground truth — corpus too small for k")
 
     // Every candidate's hit count comes from ONE action: each search's
@@ -184,10 +188,11 @@ object AnnAdvisor {
       // integer Lloyd (bit-replayable; cosine is scale-invariant so the
       // fixed-point centroids feed the cosine quantizer directly — the
       // q_ann_ivf_trained spelling)
+      val (km, assigned) =
+        KMeans.fit(base, idCol, vecCol, k = nlist, iters = trainedIters)
+      pins += assigned
       addGrid("kmeans", nlist, nprobes.sorted.filter(_ <= nlist),
-        IvfAnn.Model(
-          KMeans.fit(base, idCol, vecCol, k = nlist, iters = trainedIters)
-            ._1.centroids.map(_.map(_.toDouble))))
+        IvfAnn.Model(km.centroids.map(_.map(_.toDouble))))
     }
     // the corpus is signed ONCE per bit width, at the widest table
     // count any candidate at that width asks for, and every (tables,
@@ -219,10 +224,7 @@ object AnnAdvisor {
           val maxTables = configs.map(_._2).max
           val csig = LshAnn.bucketed(base, idCol, vecCol,
             numBits = bits, numTables = maxTables).localCheckpoint(true)
-          // the checkpointed signature blocks are freed by the
-          // ContextCleaner once csig goes unreachable (the repo's
-          // operator-pinning convention; Dataset.unpersist only covers
-          // CacheManager entries)
+          pins += csig
           legLsh((tables, mp) => LshAnn.searchBucketed(csig, queries,
             idCol, vecCol, k = k, numBits = bits, numTables = tables,
             multiProbe = mp))
@@ -236,6 +238,7 @@ object AnnAdvisor {
       .groupBy(col("leg"))
       .agg(count(lit(1)).as("hits"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    pins.foreach(Pin.free)
     val table = meta.toSeq.map { case (i, quantizer, nlist, np) =>
       Measured(quantizer, nlist, np,
         hitsByLeg.getOrElse(i, 0L).toDouble / possible,

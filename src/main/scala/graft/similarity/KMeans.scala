@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.graft.CheckpointStats
+import org.apache.spark.sql.graft.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -73,6 +73,27 @@ object KMeans {
     def assign(v: Column): Column = best(quantize(v)).getField("cluster")
   }
 
+  /** Pin the quantized vectors `q` of `pts0` ([[Pin]]) for Lloyd
+    * training; the same job measures the row count and min/max
+    * dimension. Ragged vectors would make the zip_with distance pad with
+    * nulls and array_min's nulls-first struct order silently assign
+    * those rows to an arbitrary cluster — they are rejected loudly
+    * instead, as are fewer than `need` rows (which also guards the
+    * seed step's bounded collect). Returns the pin, re-stated at
+    * 8 + 12·dim bytes a row, and dim.
+    */
+  private[similarity] def pinVectors(pts0: DataFrame, q: String, need: Int,
+      raggedNote: String): (DataFrame, Int) = {
+    val p = Pin(pts0, metrics = Seq(min(size(col(q))).as("mnd"),
+      max(size(col(q))).as("mxd")))
+    require(p.rows >= need, s"need >= $need non-null vectors, got ${p.rows}")
+    val (dim, mxd) = (p.metrics("mnd").asInstanceOf[Int],
+      p.metrics("mxd").asInstanceOf[Int])
+    require(dim == mxd,
+      s"ragged vector dimensions: min $dim, max $mxd$raggedNote")
+    (p.sized(8L + 12L * dim), dim)
+  }
+
   /** Run `iters` full Lloyd iterations and return the model plus the
     * final assignment frame `(idCol, cluster, dist)` under the trained
     * centroids. Null vectors are dropped.
@@ -95,25 +116,10 @@ object KMeans {
     val pts0 = df.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("__kmid"),
         seed.quantize(col(vecCol)).as("__kmq"))
-    // one materialization reused by every iteration + the final
-    // assignment; honest stats so downstream joins plan sanely
-    val cp = pts0.localCheckpoint(true)
-    // one stats pass: row count + min/max dimension. Ragged vectors
-    // would make the zip_with distance pad with nulls and array_min's
-    // nulls-first struct order silently assign those rows to an
-    // arbitrary cluster — reject them loudly instead; this also guards
-    // the empty-input head() the seed step would otherwise die on.
-    val st = cp.agg(count(lit(1)).as("n"),
-      min(size(col("__kmq"))).as("mnd"), max(size(col("__kmq"))).as("mxd"))
-      .head()
-    val n = st.getLong(0)
-    require(n >= k, s"need >= $k non-null vectors, got $n")
-    val dim = st.getInt(1)
-    require(dim == st.getInt(2),
-      s"ragged vector dimensions: min $dim, max ${st.getInt(2)} — " +
-        "k-means requires a fixed embedding dimension")
+    // one pin reused by every iteration + the final assignment
+    val (pts, dim) = pinVectors(pts0, "__kmq", k,
+      " — k-means requires a fixed embedding dimension")
     require(dim >= 1, "vectors must be non-empty")
-    val pts = CheckpointStats.withRowCount(cp, n, 8L + 12L * dim)
     require(dim.toLong * 4L * scale * scale > 0 &&
         dim.toLong <= Long.MaxValue / (4L * scale * scale),
       s"dim=$dim at scale=$scale can overflow 64-bit distances")

@@ -1,6 +1,5 @@
 package graft.similarity
 
-import org.apache.spark.sql.graft.CheckpointStats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -168,23 +167,14 @@ object PqAnn {
     require(scale > 0 && java.lang.Long.bitCount(scale) == 1,
       "scale must be a power of two (exact double multiplication)")
     require(scale <= (1L << 28), s"scale=$scale leaves no distance headroom")
-    val cp = pts0.localCheckpoint(true)
-    // one stats pass: the ragged-dim guard (cf. KMeans.fit — a short
-    // vector would null-pad zip_with and corrupt the argmin silently)
-    val st = cp.agg(count(lit(1)).as("n"),
-      min(size(col("__pqq"))).as("mnd"), max(size(col("__pqq"))).as("mxd"))
-      .head()
-    val n = st.getLong(0)
-    require(n >= ksub, s"need >= $ksub non-null vectors, got $n")
-    val dim = st.getInt(1)
-    require(dim == st.getInt(2),
-      s"ragged vector dimensions: min $dim, max ${st.getInt(2)}")
+    // one pin, the ragged-dim guard measured on its job (cf. KMeans.fit —
+    // a short vector would null-pad zip_with and corrupt the argmin)
+    val (pts, dim) = KMeans.pinVectors(pts0, "__pqq", ksub, "")
     require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
     val dsub = dim / m
     // ADC sums all dim terms: the same Long-headroom bound as KMeans
     require(dim.toLong <= Long.MaxValue / (4L * scale * scale),
       s"dim=$dim at scale=$scale can overflow 64-bit distances")
-    val pts = CheckpointStats.withRowCount(cp, n, 8L + 12L * dim)
 
     // deterministic seeds: subvectors of the ksub smallest ids
     val seedRows = pts.orderBy(col("__pqid")).limit(ksub)

@@ -1,8 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.graft.CheckpointStats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 
 /** BPE merge training (Sennrich et al. 2016) — the tokenizer-training
   * step of an LLM data pipeline, distributed and DETERMINISTIC: ties in
@@ -33,8 +33,9 @@ import org.apache.spark.sql.functions._
   *      symbol can never re-match as the pair's left side in the same
   *      round — the property that makes the fold exact).
   *
-  * The vocab frame is re-checkpointed each round (vocab-sized, pinned
-  * stats) so the k-round plan does not nest k interpreted HOFs.
+  * The vocab frame is re-pinned each round ([[Pin]]: vocab-sized, its
+  * row count observed on the pin's own job) so the k-round plan does
+  * not nest k interpreted HOFs.
   *
   * Initial symbols are the word's characters plus a final `</w>`
   * end-of-word marker (the Sennrich convention, so merges distinguish
@@ -76,17 +77,11 @@ object Bpe {
   def fit(words: DataFrame, wordCol: String, freqCol: String,
           k: Int): (Seq[Merge], DataFrame) = {
     require(k >= 0, "k >= 0")
-    var vocab = words
+    var vocab = Pin(words
       .select(col(wordCol).as("word"), col(freqCol).cast("long").as("freq"),
         initSymbols(col(wordCol)).as("symbols"))
-      .filter(col("word").isNotNull && length(col("word")) > 0)
-    var vCk = vocab.localCheckpoint()
-    // the vocab ROW COUNT is invariant across rounds ([[applyMerge]] is a
-    // per-row column transform — no row is ever added or dropped), so one
-    // count job up front seeds every round's pinned stats; re-counting
-    // per round paid k extra jobs for a number that cannot change
-    val vocabRows = vCk.count()
-    vocab = CheckpointStats.withRowCount(vCk, vocabRows, 64L)
+      .filter(col("word").isNotNull && length(col("word")) > 0),
+      rowBytes = 64L).df
 
     val merges = Seq.newBuilder[Merge]
     var done = false
@@ -105,9 +100,8 @@ object Bpe {
         val next = vocab.withColumn("symbols",
           applyMerge(col("symbols"), a, b))
         val old = vocab
-        vCk = next.localCheckpoint()
-        vocab = CheckpointStats.withRowCount(vCk, vocabRows, 64L)
-        CheckpointStats.free(old)
+        vocab = Pin(next, rowBytes = 64L).df
+        Pin.free(old)
       }
       r += 1
     }

@@ -1,9 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointStats
+import org.apache.spark.sql.graft.Pin
 
 /** Corpus-level line deduplication (the C4 / RefinedWeb cleaning step):
   * drop every line whose exact text occurs in at least `minDocs`
@@ -21,10 +20,10 @@ import org.apache.spark.sql.graft.CheckpointStats
   * every line occurring twice — unbounded at corpus scale, where a
   * forced broadcast would OOM the driver. So the broadcast decision is
   * MEASURED, not hinted: the frequent set is checkpointed (it must be
-  * computed either way), its real row count and byte size are read off
-  * the materialized blocks, and [[CheckpointStats]] pins them on the
-  * leaf — the planner then picks broadcast vs shuffle for the anti-join
-  * from honest statistics under the session's own
+  * computed either way), and its real row count and byte size are
+  * observed by that same [[Pin]] job and set on the leaf — the planner
+  * then picks broadcast vs shuffle for the anti-join from honest
+  * statistics under the session's own
   * `autoBroadcastJoinThreshold`. (AQE alone does NOT recover the
   * broadcast here: it converts only after both shuffle map stages ran,
   * so the probe side — every line in the corpus — pays its shuffle
@@ -63,24 +62,22 @@ object LineDedup {
     val eligible = length(col("__graft_line")) >= minLineChars
 
     // frequent-line set: no broadcast hint — its size is data-dependent
-    // (unbounded at minDocs=2). Materialize it once (it is needed either
-    // way), then pin its MEASURED row count + byte size on the
-    // checkpoint leaf so the planner decides broadcast vs shuffle from
-    // real statistics rather than a guess or a forced hint.
-    val freqRaw = lines
+    // (unbounded at minDocs=2). Pin it once (it is needed either way);
+    // the pin's job also measures its row count and characters, so the
+    // planner decides broadcast vs shuffle from real statistics rather
+    // than a guess or a forced hint.
+    val freq = Pin(lines
       .filter(eligible)
       .groupBy("__graft_line")
       .agg(count_distinct(col(idCol)).as("__graft_df"))
       .filter(col("__graft_df") >= minDocs)
-      .select("__graft_line")
-      .localCheckpoint()
-    val Row(nFreq: Long, freqBytes: Long) = freqRaw
-      .agg(count(lit(1)).cast("long"),
-        coalesce(sum(length(col("__graft_line"))), lit(0L)).cast("long"))
-      .head()
+      .select("__graft_line"),
+      metrics = Seq(coalesce(sum(length(col("__graft_line"))), lit(0L))
+        .cast("long").as("chars")))
     // +32 B/row: UTF8String + unsafe-row overhead on top of raw chars
-    val frequent = CheckpointStats.withRowCount(freqRaw, nFreq,
-      if (nFreq == 0) 1L else freqBytes / nFreq + 32L)
+    val frequent = freq.sized(
+      if (freq.rows == 0) 1L
+      else freq.metrics("chars").asInstanceOf[Long] / freq.rows + 32L)
 
     val kept = lines
       .filter(eligible)

@@ -4,13 +4,15 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ListenerDrain
 
 /** Job budgets: on a fixed small input, the Spark jobs an operator call
   * launches — from the call through its materialization — may not grow
-  * past the recorded count, and the call leaves no persisted RDD behind.
-  * Lower a cap when an operator gets cheaper.
+  * past the recorded count, and the only RDDs the call leaves persisted
+  * are the pins its returned frame reads (none for a call that returns
+  * no frame). Lower a cap when an operator gets cheaper.
   */
 class JobBudgetSpec extends SparkSuite {
 
@@ -37,16 +39,27 @@ class JobBudgetSpec extends SparkSuite {
     (jobs.get, (sc.getPersistentRDDs.keySet -- before).toSet)
   }
 
-  /** Budget for a call that returns `Unit` (a write). */
-  private def budgetCall(name: String, cap: Int)(call: => Unit): Unit = {
+  /** Budget for a call that returns no frame (a write, an advice). */
+  private def budgetCall(name: String, cap: Int)(call: => Any): Unit = {
     val (jobs, pinned) = measure(call)
+    info(s"$name: $jobs jobs")
     assert(jobs <= cap, s"$name launched $jobs jobs, budget $cap")
     assert(pinned.isEmpty, s"$name left persisted RDDs $pinned")
   }
 
-  /** Budget for building and materializing `df`. */
-  private def budget(name: String, cap: Int)(df: => DataFrame): Unit =
-    budgetCall(name, cap) { df.queryExecution.toRdd.count(); () }
+  /** Budget for building and materializing `df`; the pins under its plan
+    * may stay, and are released afterwards. */
+  private def budget(name: String, cap: Int)(df: => DataFrame): Unit = {
+    var out: DataFrame = null
+    val (jobs, pinned) = measure { out = df; out.queryExecution.toRdd.count() }
+    val read = out.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+      .filter(r => spark.sparkContext.getPersistentRDDs.contains(r.id))
+    info(s"$name: $jobs jobs")
+    assert(jobs <= cap, s"$name launched $jobs jobs, budget $cap")
+    assert(pinned == read.map(_.id).toSet,
+      s"$name left persisted RDDs $pinned; its result reads ${read.map(_.id)}")
+    read.foreach(_.unpersist(blocking = false))
+  }
 
   // each: the range exchange's sample and map jobs, the running sum's
   // totals job and the result, plus the aggregate's map job (factorize,
@@ -87,5 +100,48 @@ class JobBudgetSpec extends SparkSuite {
     budget("searchIndex", 6)(LshAnn.searchIndex(spark, path,
       corpus.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
       numBits = 4, numTables = 2, multiProbe = 2))
+  }
+
+  // every operator that pins AND needs the pin's size or a metric: the
+  // count, the convergence witness or the shape check rides the pin's own
+  // job, and the pins the result does not read are freed
+  test("pin users: job budgets and only the result's pins left") {
+    val edges = spark.range(120).select(col("id").as("src"),
+      ((col("id") * 7 + 3) % 120).as("dst"))
+    budget("PageRank tolerance > 0", 14)(graft.graph.PageRank(edges, "src", "dst",
+      iterations = 6, tolerance = 1000000L))
+    budget("LabelPropagation", 18)(graft.graph.LabelPropagation(
+      spark.range(120).toDF("node"), edges, iters = 3))
+    budget("ConnectedComponents", 38)(graft.dedup.ConnectedComponents(
+      spark.range(100).where(col("id") % 10 =!= 9)
+        .select(col("id").as("a"), (col("id") + 1).as("b")),
+      "a", "b", localFinishEdges = 0L))
+    val vecs = spark.range(300).select(col("id").as("vec_id"),
+      array((0 until 8).map(d => sin(col("id") * (d + 1) + lit(d))): _*)
+        .as("embedding"))
+    budget("KMeans.fit", 7)(graft.similarity.KMeans.fit(vecs, "vec_id",
+      "embedding", k = 4, iters = 2)._2)
+    budget("PqAnn.fit", 7)(graft.similarity.PqAnn.fit(vecs, "vec_id",
+      "embedding", m = 2, ksub = 4, iters = 2)._2)
+    budget("Bpe.fit", 14)(graft.text.Bpe.fit(
+      spark.range(60).select(concat(lit("lo"), (col("id") % 7).cast("string"),
+        lit("wer")).as("word"), (col("id") % 5 + 1).as("freq")),
+      "word", "freq", k = 4)._2)
+    budget("LineDedup", 6)(graft.text.LineDedup(
+      spark.range(64).select(col("id").as("doc_id"),
+        concat(lit("COMMON BOILERPLATE LINE\nunique prose "),
+          col("id").cast("string")).as("text")),
+      "doc_id", "text", minDocs = 32))
+    budgetCall("AnnAdvisor", 26)(graft.similarity.AnnAdvisor.advise(vecs,
+      "vec_id", "embedding", k = 5, recallFloor = 0.5, nlists = Seq(8),
+      nprobes = Seq(1, 2), sampleQueries = 8, trainedNlists = Seq(8),
+      trainedIters = 1, lshConfigs = Seq((4, 2, 0), (4, 3, 1))))
+    budgetCall("LshAdvisor", 15)(graft.dedup.LshAdvisor.advise(
+      spark.range(48).select(col("id").as("doc_id"),
+        concat_ws(" ", array((0 until 20).map(j =>
+          concat(lit(s"w$j-"), (col("id") % 16).cast("string"))): _*))
+          .as("text")),
+      "text", "doc_id", numHashes = 8, bandCandidates = Seq(2, 8),
+      sampleDocs = 32))
   }
 }

@@ -142,7 +142,7 @@ class PlanSpecs extends SparkSuite {
     // (O(4^rounds) BITS with two pointer jumps per round) until the
     // optimizer's stats walks grind on million-bit BigInt products —
     // q_dedup_embcluster measured seconds → >7 min at sf0.1 before
-    // CheckpointStats pinned each round's leaf to the real row count.
+    // each round's leaf was pinned to the real row count (now `Pin`).
     import graft.dedup.ConnectedComponents
     import spark.implicits._
     // a chain forces several rounds, so compounding would be visible
