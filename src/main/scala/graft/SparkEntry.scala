@@ -675,8 +675,9 @@ object SparkEntry {
           r6(col("vsum")).as("vsum"))
     }
 
-  /** Keyless (global-order) prev/next — exercises the range-partition +
-    * boundary-carry path (no data-sized single-partition window).
+  /** Keyless (global-order) prev/next — exercises the running-scan
+    * path (range exchange + carries, no data-sized single-partition
+    * window).
     */
   private val q_prev_next_global: (SparkSession, String) => DataFrame =
     (s, dir) =>
@@ -740,9 +741,9 @@ object SparkEntry {
         orderBy = Seq(col("ts"), col("event_id")), limit = Some(2))
         .select(col("event_id").as("eid"), col("v").as("v_imp"))
 
-  /** Keyless (global-order) afill — exercises the two-phase
-    * range-partition + carry path (no data-sized single-partition
-    * window; see the Impute scale note).
+  /** Keyless (global-order) afill — exercises the running-scan path
+    * (range exchange + donor carries, no data-sized single-partition
+    * window; see the Impute scaladoc).
     */
   private val q_impute_global: (SparkSession, String) => DataFrame =
     (s, dir) =>
@@ -856,7 +857,7 @@ object SparkEntry {
     *   → 7 WordPiece tokenize with a BPE vocab trained on the CURATED
     *       corpus itself (train → fold → codegen'd longest match)
     *   → 8 token-budget packing (budget 128, doc-id order, two-phase
-    *       PrefixSum offsets)
+    *       RunningScan offsets)
     *
     * Output: per (lang, source) doc/token/UNK counts plus the number of
     * (doc × pack) overlap rows — every stage's membership and the

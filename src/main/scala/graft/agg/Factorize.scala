@@ -1,8 +1,8 @@
 package graft.agg
 
-import graft.core.PrefixSum
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RunningScan
 
 /** Joint dense-integer row encoding — reimplementation of the reference's
   * `factorize` (`/root/reference/catabra_pandas/misc.py:1119-1318`).
@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * Plan: `distinct()` on the key columns (map-side combine shrinks this to
   * key cardinality), then each key's code is a running sum of 1 over the
   * distinct keys, ordered by the keys or by first appearance
-  * ([[graft.core.PrefixSum]]: one range exchange, one totals job, no
+  * ([[RunningScan.prefixSum]]: one range exchange, one totals job, no
   * single-partition step and no pin), then a broadcast-friendly join
   * back. The two-frame variant unions both key sets so equal rows across
   * frames share codes (`misc.py:1230-1260`); each of its two results
@@ -92,7 +92,7 @@ object Factorize {
 
   /** Dense 0-based codes: a running count of the keys in `order`. */
   private def number(keyed: DataFrame, order: Seq[Column]): DataFrame =
-    PrefixSum.inclusive(keyed, order, lit(1L), "__graft_code")
+    RunningScan.prefixSum(keyed, order, lit(1L), "__graft_code")
       .withColumn("__graft_code", col("__graft_code") - 1)
       .drop("__graft_ord")
 

@@ -1,8 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RunningScan
 
 /** API-parity counterpart of the reference's `partition_series`
   * (`/root/reference/catabra_pandas/misc.py:644-696`): assign each group a
@@ -27,10 +27,10 @@ object PartitionSeries {
       .agg(count(lit(1)).as("__graft_n"))
     // cap each group at the budget so oversized groups consume exactly one
     // partition (misc.py:683-688 gives them their own partition); the
-    // running sum over group order goes through the two-phase PrefixSum —
+    // running sum over group order goes through the two-phase RunningScan —
     // a global orderBy window would single-partition the per-group frame
     val capped = least(col("__graft_n"), lit(budget))
-    PrefixSum.inclusive(sizes, groupBy.map(col), capped, "__graft_cum")
+    RunningScan.prefixSum(sizes, groupBy.map(col), capped, "__graft_cum")
       .withColumn("partition_id",
         ((col("__graft_cum") - 1L) / budget).cast("long"))
       .drop("__graft_n", "__graft_cum")

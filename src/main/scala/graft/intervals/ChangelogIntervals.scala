@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   *     (default) or drop them with `dropEmpty = true`;
   *   - keys are required: a keyless global changelog would need a
   *     total order over the whole frame (use `PrevNextValues`' keyless
-  *     two-phase path for that shape).
+  *     running-scan path for that shape).
   */
 object ChangelogIntervals {
 

@@ -3,6 +3,7 @@ package graft.intervals
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{Carry, RunningScan}
 
 /** Interval set-algebra via sweep-line overlap counting — reimplementation
   * of the reference's `combine_intervals`
@@ -16,12 +17,18 @@ import org.apache.spark.sql.functions._
   * share attribute values count as one (`misc.py:367-401`). Zero-length
   * output intervals are dropped (`misc.py:429`).
   *
-  * Plan: unpivot to ±1 events; collapse simultaneous events; running depth
-  * via a per-group window; gaps-and-islands segment extraction. With
-  * `attrCols` the depth is computed per attribute first and transitions of
-  * the per-attribute active flag become the combined events — one extra
-  * window pass, no per-attribute loop. Everything is partitioned by
-  * `groupBy` (plus `attrCols` for the first pass): two shuffles total.
+  * Plan: unpivot to ±1 events; collapse simultaneous events; per group
+  * and in event order, the running depth and the previous event, so each
+  * event closes the region [previous event, event) at the depth before
+  * it; gaps-and-islands segment extraction, a segment being the regions
+  * with the same running count of regions outside the depth range. With
+  * `attrCols` the depth is computed per attribute first and transitions
+  * of the per-attribute active flag become the combined events — one
+  * extra window pass, no per-attribute loop. With `groupBy` everything is
+  * partitioned by it (plus `attrCols` for the first pass): two shuffles
+  * total. Without `groupBy` the two running passes are scans
+  * ([[RunningScan]]) over one range exchange on the event time, not a
+  * window over a single partition.
   */
 object CombineIntervals {
 
@@ -74,33 +81,37 @@ object CombineIntervals {
           .agg(sum(col(d)).as(d))
       }
 
-    val w = Window.partitionBy(gb: _*).orderBy(col(t))
-    val depth = sum(col(d)).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    val nextT = lead(col(t), 1).over(w)
-
+    val (depth, prev, flag, seg) = ("__graft_depth", "__graft_prev", "__graft_flag", "__graft_seg")
+    val byT = Window.partitionBy(gb: _*).orderBy(col(t))
+    val upTo = byT.rowsBetween(Window.unboundedPreceding, 0)
+    val running =
+      if (groupBy.isEmpty) {
+        RunningScan(perGroupEvents, Seq(col(t)), RunningScan.Agg(depth, Carry.Sum, col(d)),
+            RunningScan.Agg(prev, Carry.Last(ignoreNulls = false), col(t), inclusive = false))
+          .withColumn(prev, col(prev).getField("v"))
+      } else {
+        perGroupEvents.withColumn(depth, sum(col(d)).over(upTo))
+          .withColumn(prev, lag(col(t), 1).over(byT))
+      }
+    val before = col(depth) - col(d)
     val inRange = nMax match {
-      case Some(mx) => depth >= nMin && depth <= mx
-      case None     => depth >= nMin
+      case Some(mx) => before >= nMin && before <= mx
+      case None     => before >= nMin
     }
-    // the region [t, nextT) qualifies; the last event of a group never does
+    // the region [prev, t) qualifies; none before a group's first event
     // (misc.py:407-410: n_min=0 must not produce unbounded intervals)
-    val flagged = perGroupEvents
-      .withColumn("__graft_flag", inRange && nextT.isNotNull)
-      .withColumn("__graft_next", nextT)
-
-    val newSeg = when(
-      col("__graft_flag") && !coalesce(lag(col("__graft_flag"), 1).over(w), lit(false)),
-      1L).otherwise(0L)
-    val segmented = flagged
-      .withColumn("__graft_seg",
-        sum(newSeg).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .filter(col("__graft_flag"))
+    val flagged = running.withColumn(flag, inRange && col(prev).isNotNull)
+    val outside = when(col(flag), 0L).otherwise(1L)
+    val segmented =
+      (if (groupBy.isEmpty) RunningScan.prefixSum(flagged, Seq(col(t)), outside, seg)
+      else flagged.withColumn(seg, sum(outside).over(upTo)))
+        .filter(col(flag))
 
     val merged = segmented
-      .groupBy((gb :+ col("__graft_seg")): _*)
-      .agg(min(col(t)).as(startCol), max(col("__graft_next")).as("__graft_stop"))
+      .groupBy((gb :+ col(seg)): _*)
+      .agg(min(col(prev)).as(startCol), max(col(t)).as("__graft_stop"))
       .filter(col(startCol) < col("__graft_stop"))
-      .drop("__graft_seg")
+      .drop(seg)
 
     stopCol match {
       case Some(sc) => merged.withColumnRenamed("__graft_stop", sc)

@@ -30,7 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => BinnedJoinRewrite)
     ext.injectOptimizerRule(_ => SweepJoinRewrite)
     ext.injectPlannerStrategy(_ => graft_sweep.IntervalSweepStrategy)
-    ext.injectPlannerStrategy(_ => graft_sweep.RunningSumStrategy)
+    ext.injectPlannerStrategy(_ => graft_sweep.RunningScanStrategy)
     GraftFunctions.all.foreach(ext.injectFunction)
   }
 }

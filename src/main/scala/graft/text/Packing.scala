@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.core.PrefixSum
+import org.apache.spark.sql.graft.RunningScan
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * pack boundary, in which case they appear in both packs with the
   * doc-relative token range each pack takes).
   *
-  * Plan shape: the global token offsets come from [[PrefixSum]] (two
+  * Plan shape: the global token offsets come from [[RunningScan.prefixSum]] (two
   * parallel phases — NO all-rows single-partition window), and each doc
   * explodes to the packs its token interval touches — the same
   * bin-explosion pattern as the binned interval join, with the pack id
@@ -36,7 +36,7 @@ object Packing {
       nTokens: Column,
       budget: Long): DataFrame = {
     require(budget > 0, "budget must be positive")
-    val withEnd = PrefixSum.inclusive(
+    val withEnd = RunningScan.prefixSum(
       df.withColumn("__graft_n", nTokens.cast("long"))
         .filter(col("__graft_n") > 0),
       orderCols, col("__graft_n"), "__graft_end")

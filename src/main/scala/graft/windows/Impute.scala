@@ -1,9 +1,10 @@
 package graft.windows
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, FloatType, NumericType}
+import org.apache.spark.sql.graft.{Carry, RunningScan}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, NumericType}
 
 /** Grouped imputation — Spark-native reimplementation of the reference's
   * `impute` (`/root/reference/catabra_pandas/misc.py:699-845`).
@@ -22,28 +23,32 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, NumericType}
   *
   * The reference imputes "in the DataFrame's current order"; Spark frames
   * are unordered, so the order is an explicit `orderBy` parameter.
-  * All passes share one shuffle + sort on (groupBy, orderBy) — the chained
-  * window expressions reuse the same [[WindowSpec]] partitioning.
+  *
+  * Every method is one combine step over the same donor columns: per
+  * column, the nearest non-null value at or before each row and at or
+  * after it, with the row numbers they sit at (only the directions the
+  * method reads). With `groupBy` the donors are running `last(ignoreNulls)`
+  * windows over one shuffle + sort on (groupBy, orderBy), plus a mirrored
+  * frame for the next donors. Without `groupBy` any row may take its donor
+  * from arbitrarily far away in the global order; the donors are then
+  * [[RunningScan]] carries (the last non-null value with its row number,
+  * from the front and from the back) over one range exchange on
+  * `orderBy`, with no single-partition step. A differential spec pins
+  * keyless ≡ grouped with a constant key for every method × limit.
   *
   * `ffill`/`bfill`/`afill` work on any data type (afill midpoints require a
   * numeric or timestamp-like type supporting `+`/`-`/`/2` — enforced by the
   * analyzer); `linear`/`lfill` require numeric columns.
-  *
-  * Scale note: with `groupBy = Nil` every row may depend on a donor
-  * arbitrarily far away in the global order, which a naive
-  * `Window.partitionBy()` serves by moving the whole table through ONE
-  * task. The keyless path here instead runs the [[graft.core.PrefixSum]]
-  * two-phase shape: range-partition on the order, fill within each
-  * partition in parallel, then fix up only the rows whose donor lives in
-  * an earlier/later partition via a per-partition donor summary
-  * (#shuffle-partitions rows — the only single-partition step, bounded
-  * by config, not data). A differential spec pins keyless ≡ grouped with
-  * a constant key for every method × limit.
   */
 object Impute {
 
-  private val Rn  = "__graft_rn"
-  private val Pid = "__graft_pid"
+  private val Rn = "__graft_rn"
+  // per imputed column: the previous (at or before the row) and next (at
+  // or after it) non-null value, and the row numbers they sit at
+  private def pv(c: String) = s"__graft_pv_$c"
+  private def pn(c: String) = s"__graft_pn_$c"
+  private def nv(c: String) = s"__graft_nv_$c"
+  private def nn(c: String) = s"__graft_nn_$c"
 
   def apply(
       df: DataFrame,
@@ -56,248 +61,77 @@ object Impute {
     require(Seq("ffill", "bfill", "afill", "linear", "lfill").contains(method),
       s"method=$method")
     limit.foreach(l => require(l > 0, "limit must be positive"))
-    if (groupBy.nonEmpty) grouped(df, cols, method, groupBy, orderBy, limit)
-    else keyless(df, cols, method, orderBy, limit)
+    if (method == "linear" || method == "lfill") cols.foreach { c =>
+      require(df.schema(c).dataType.isInstanceOf[NumericType],
+        s"linear interpolation requires a numeric column, got $c")
+    }
+    val (prev, next) = (method != "bfill", method != "ffill")
+    val donors =
+      if (groupBy.nonEmpty) windowDonors(df, cols, groupBy, orderBy, prev, next)
+      else scanDonors(df, cols, orderBy, prev, next)
+    val imputed = cols.map(c => c -> combine(method, c, df.schema(c).dataType, limit)).toMap
+    donors.select(df.columns.map(c => imputed.getOrElse(c, col(c)).as(c)).toIndexedSeq: _*)
   }
 
-  // ---------------------------------------------------------------- grouped
-
-  private def grouped(
-      df: DataFrame,
-      cols: Seq[String],
-      method: String,
-      groupBy: Seq[String],
-      orderBy: Seq[Column],
-      limit: Option[Int]): DataFrame = {
+  /** Donors from running frames over each group in `orderBy`. */
+  private def windowDonors(
+      df: DataFrame, cols: Seq[String], groupBy: Seq[String], orderBy: Seq[Column],
+      prev: Boolean, next: Boolean): DataFrame = {
     val part = Window.partitionBy(groupBy.map(col): _*)
-    val withRn = df.withColumn(Rn,
-      row_number().over(part.orderBy(orderBy: _*)))
-    val asc  = part.orderBy(col(Rn).asc).rowsBetween(Window.unboundedPreceding, 0)
-    val desc = part.orderBy(col(Rn).desc).rowsBetween(Window.unboundedPreceding, 0)
-
-    val imputed = method match {
-      case "ffill"  => onePass(withRn, cols, asc, desc, limit, f = true, b = false)
-      case "bfill"  => onePass(withRn, cols, asc, desc, limit, f = false, b = true)
-      case "linear" => linearPass(withRn, cols, asc, desc, limit)
-      case "afill"  =>
-        // midpoint of ffill and bfill where both defined (misc.py:744-758)
-        val exprs = cols.map { c =>
-          val fv = fillExpr(col(c), asc, limit)
-          val bv = fillExpr(col(c), desc, limit)
-          when(fv.isNotNull && bv.isNotNull, fv + (bv - fv) / 2)
-            .otherwise(coalesce(fv, bv)).as(c)
-        }
-        replace(withRn, cols, exprs)
-      case "lfill"  =>
-        val lin = linearPass(withRn, cols, asc, desc, limit)
-        val ff  = onePass(lin, cols, asc, desc, limit, f = true, b = false)
-        onePass(ff, cols, asc, desc, limit, f = false, b = true)
+    val withRn = df.withColumn(Rn, row_number().over(part.orderBy(orderBy: _*)))
+    // the donor's row number via the SAME last(ignoreNulls) frame that
+    // picks the donor value
+    def donors(o: Column, v: String => String, n: String => String) = {
+      val w = part.orderBy(o).rowsBetween(Window.unboundedPreceding, 0)
+      cols.flatMap(c => Seq(last(col(c), ignoreNulls = true).over(w).as(v(c)),
+        last(when(col(c).isNotNull, col(Rn)), ignoreNulls = true).over(w).as(n(c))))
     }
-    imputed.drop(Rn)
+    withRn.select(col("*") +: ((if (prev) donors(col(Rn).asc, pv, pn) else Nil) ++
+      (if (next) donors(col(Rn).desc, nv, nn) else Nil)): _*)
   }
 
-  /** Forward- or backward-fill value of `c` under frame `w` (running frame
-    * in fill direction), honoring `limit`: a row more than `limit` rows
-    * from the donating valid value stays null.
-    */
-  private def fillExpr(c: Column, w: WindowSpec, limit: Option[Int]): Column = {
-    val filled = last(c, ignoreNulls = true).over(w)
-    limit match {
-      case None => filled
-      case Some(k) =>
-        // the donor's row number via the SAME last(ignoreNulls) frame that
-        // picks the donor value — max(rn) would find the farthest donor
-        // under the descending (bfill) frame, not the nearest
-        val donorRn = last(when(c.isNotNull, col(Rn)), ignoreNulls = true).over(w)
-        val dist    = abs(col(Rn) - donorRn)
-        when(c.isNotNull, c).when(dist <= k, filled).otherwise(lit(null))
-    }
+  /** Donors from running scans over the global `orderBy`. */
+  private def scanDonors(
+      df: DataFrame, cols: Seq[String], orderBy: Seq[Column],
+      prev: Boolean, next: Boolean): DataFrame = {
+    val dirs = (if (prev) Seq((false, pv _, pn _)) else Nil) ++
+      (if (next) Seq((true, nv _, nn _)) else Nil)
+    val scanned = RunningScan(df, orderBy, RunningScan.Agg(Rn, Carry.Sum, lit(1L)) +:
+      dirs.flatMap { case (suffix, v, _) => cols.map(c =>
+        RunningScan.Agg(v(c), Carry.Last(ignoreNulls = true), col(c), suffix = suffix)) }: _*)
+    dirs.flatMap { case (_, v, n) => cols.map(c => (v(c), n(c))) }
+      .foldLeft(scanned) { case (d, (v, n)) =>
+        d.withColumn(n, col(v).getField("i")).withColumn(v, col(v).getField("v"))
+      }
   }
 
-  private def onePass(
-      df: DataFrame, cols: Seq[String],
-      asc: WindowSpec, desc: WindowSpec,
-      limit: Option[Int], f: Boolean, b: Boolean): DataFrame = {
-    val exprs = cols.map { c =>
-      (if (f) fillExpr(col(c), asc, limit) else fillExpr(col(c), desc, limit)).as(c)
+  /** The imputed value of column `c` of type `dt` from its donors. */
+  private def combine(method: String, c: String, dt: DataType, limit: Option[Int]): Column = {
+    val (x, rn) = (col(c), col(Rn))
+    val (p, pRn, n, nRn) = (col(pv(c)), col(pn(c)), col(nv(c)), col(nn(c)))
+    // a donor more than `limit` rows away does not fill
+    def fill(v: Column, at: Column) =
+      limit.fold(v)(k => when(x.isNotNull, x).when(abs(rn - at) <= k, v))
+    val (f, b) = (fill(p, pRn), fill(n, nRn))
+    // interior only, by position, as if the whole gap were interpolated;
+    // `limit = k` fills only the first k rows of a gap (pandas forward limit)
+    def interp(at: Column) = (p + (n - p) *
+      ((at - pRn).cast(DoubleType) / (nRn - pRn).cast(DoubleType)))
+      .cast(if (dt == FloatType) FloatType else DoubleType)
+    val inside = when(x.isNotNull, x).when(p.isNull || n.isNull, lit(null))
+    val linear = limit.fold(inside.otherwise(interp(rn)))(k =>
+      inside.when(rn - pRn <= k, interp(rn)))
+    method match {
+      case "ffill" => f
+      case "bfill" => b
+      case "afill" => // misc.py:744-758
+        when(f.isNotNull && b.isNotNull, f + (b - f) / 2).otherwise(coalesce(f, b))
+      case "linear" => linear
+      case "lfill" => // misc.py:760-764
+        // linear, then ffill and bfill over its result: inside a gap, the
+        // ffill donor past the first k rows is the k-th interpolated row
+        val ff = limit.fold(f)(k => when(n.isNull, f).when(rn - pRn <= 2 * k, interp(pRn + k)))
+        coalesce(linear, ff, b)
     }
-    replace(df, cols, exprs)
-  }
-
-  /** Interior-only positional linear interpolation; with `limit = k` only
-    * the first `k` rows of each null gap are filled (pandas forward limit).
-    */
-  private def linearPass(
-      df: DataFrame, cols: Seq[String],
-      asc: WindowSpec, desc: WindowSpec,
-      limit: Option[Int]): DataFrame = {
-    cols.foreach { c =>
-      require(df.schema(c).dataType.isInstanceOf[NumericType],
-        s"linear interpolation requires a numeric column, got $c")
-    }
-    val exprs = cols.map { cn =>
-      val c = col(cn)
-      val pv  = last(c, ignoreNulls = true).over(asc)
-      val pRn = max(when(c.isNotNull, col(Rn))).over(asc)
-      val nv  = last(c, ignoreNulls = true).over(desc)
-      val nRn = min(when(c.isNotNull, col(Rn))).over(desc)
-      linearExpr(c, df.schema(cn).dataType, pv, pRn, nv, nRn, limit).as(cn)
-    }
-    replace(df, cols, exprs)
-  }
-
-  /** Shared linear-interpolation combine: prev/next donor (value, rn) →
-    * imputed value; interior-only, pandas forward `limit`.
-    */
-  private def linearExpr(
-      c: Column, dt: org.apache.spark.sql.types.DataType,
-      pv: Column, pRn: Column, nv: Column, nRn: Column,
-      limit: Option[Int]): Column = {
-    val frac = (col(Rn) - pRn).cast(DoubleType) / (nRn - pRn).cast(DoubleType)
-    val interp = (pv + (nv - pv) * frac).cast(dt match {
-      case FloatType => FloatType
-      case _         => DoubleType
-    })
-    val base = when(c.isNotNull, c)
-      .when(pv.isNull || nv.isNull, lit(null))
-    limit match {
-      case None    => base.otherwise(interp)
-      case Some(k) => base.when(col(Rn) - pRn <= k, interp).otherwise(lit(null))
-    }
-  }
-
-  // ---------------------------------------------------------------- keyless
-
-  private def fvc(c: String) = s"__graft_fv_$c"
-  private def fdc(c: String) = s"__graft_fd_$c"
-  private def bvc(c: String) = s"__graft_bv_$c"
-  private def bdc(c: String) = s"__graft_bd_$c"
-
-  /** Global-order imputation without moving the table through one task:
-    * range-partition on `orderBy`, number rows globally via per-partition
-    * counts, then each pass = parallel within-partition fill + a carry
-    * join against a per-partition donor summary.
-    */
-  private def keyless(
-      df: DataFrame,
-      cols: Seq[String],
-      method: String,
-      orderBy: Seq[Column],
-      limit: Option[Int]): DataFrame = {
-    val cnt = "__graft_cnt"; val off = "__graft_off"
-    val parts = df.repartitionByRange(orderBy: _*)
-      .withColumn(Pid, spark_partition_id())
-    val wLoc = Window.partitionBy(col(Pid)).orderBy(orderBy: _*)
-    val local = parts.withColumn(Rn, row_number().over(wLoc).cast("long"))
-    // #partitions rows — single-partition window bounded by config
-    val wOff = Window.orderBy(col(Pid)).rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy(col(Pid)).agg(count(lit(1)).as(cnt))
-      .withColumn(off, coalesce(sum(col(cnt)).over(wOff), lit(0L)))
-      .drop(cnt)
-    val withRn = local.join(broadcast(offsets), Seq(Pid))
-      .withColumn(Rn, col(Rn) + col(off)).drop(off)
-
-    val imputed = method match {
-      case "ffill" => directional(withRn, cols, forward = true, limit)
-      case "bfill" => directional(withRn, cols, forward = false, limit)
-      case "afill" =>
-        val both = dirFill(dirFill(withRn, cols, forward = true), cols, forward = false)
-        val exprs = cols.map { c =>
-          val f = limited(col(c), col(fvc(c)), col(fdc(c)), limit)
-          val b = limited(col(c), col(bvc(c)), col(bdc(c)), limit)
-          when(f.isNotNull && b.isNotNull, f + (b - f) / 2)
-            .otherwise(coalesce(f, b)).as(c)
-        }
-        dropTmp(replace(both, cols, exprs), cols)
-      case "linear" => linearKeyless(withRn, cols, limit)
-      case "lfill" =>
-        val lin = linearKeyless(withRn, cols, limit)
-        val ff  = directional(lin, cols, forward = true, limit)
-        directional(ff, cols, forward = false, limit)
-    }
-    imputed.drop(Rn, Pid)
-  }
-
-  /** Adds, per column `c`, the nearest in-fill-direction donor value
-    * (`fv`/`bv`) and its global row number (`fd`/`bd`). Within-partition
-    * donors come from a pid-partitioned window (parallel); rows before
-    * their partition's first donor are fixed up from a broadcast
-    * per-partition carry summary (the donor each partition exports,
-    * prefix-scanned over ≤ #shuffle-partitions rows).
-    */
-  private def dirFill(df: DataFrame, cols: Seq[String], forward: Boolean): DataFrame = {
-    val vc: String => String = if (forward) fvc else bvc
-    val dc: String => String = if (forward) fdc else bdc
-    val ord = if (forward) col(Rn).asc else col(Rn).desc
-    val w = Window.partitionBy(col(Pid)).orderBy(ord)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val withLocal = df.select(df.columns.map(col).toIndexedSeq ++ cols.flatMap { c =>
-      Seq(last(col(c), ignoreNulls = true).over(w).as(vc(c)),
-          last(when(col(c).isNotNull, col(Rn)), ignoreNulls = true).over(w).as(dc(c)))
-    }: _*)
-    val outC = (c: String) => s"__graft_out_$c"
-    val inC  = (c: String) => s"__graft_in_$c"
-    // the donor each partition exports in fill direction: its last
-    // (forward) / first (backward) non-null row — max_by/min_by skip
-    // rows whose ordering key is null, i.e. null values never donate
-    val aggs = cols.map { c =>
-      val ordV  = when(col(c).isNotNull, col(Rn))
-      val donor = struct(col(Rn).as("dn"), col(c).as("v"))
-      (if (forward) max_by(donor, ordV) else min_by(donor, ordV)).as(outC(c))
-    }
-    val summary = df.groupBy(col(Pid)).agg(aggs.head, aggs.tail: _*)
-    val wCarry = Window.orderBy(if (forward) col(Pid).asc else col(Pid).desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = cols.foldLeft(summary) { (d, c) =>
-      d.withColumn(inC(c), last(col(outC(c)), ignoreNulls = true).over(wCarry))
-    }.select((col(Pid) +: cols.map(c => col(inC(c)))).toIndexedSeq: _*)
-    val joined = withLocal.join(broadcast(carry), Seq(Pid))
-    val fixed = cols.foldLeft(joined) { (d, c) =>
-      d.withColumn(vc(c), coalesce(col(vc(c)), col(inC(c)).getField("v")))
-       .withColumn(dc(c), coalesce(col(dc(c)), col(inC(c)).getField("dn")))
-    }
-    fixed.drop(cols.map(inC): _*)
-  }
-
-  /** Fill value under `limit` given a donor (value, global rn): a donor
-    * farther than `limit` rows stays null — mirrors [[fillExpr]].
-    */
-  private def limited(c: Column, v: Column, dn: Column, limit: Option[Int]): Column =
-    limit match {
-      case None    => v
-      case Some(k) =>
-        when(c.isNotNull, c).when(abs(col(Rn) - dn) <= k, v).otherwise(lit(null))
-    }
-
-  private def directional(
-      df: DataFrame, cols: Seq[String],
-      forward: Boolean, limit: Option[Int]): DataFrame = {
-    val filled = dirFill(df, cols, forward)
-    val (vc, dc) = if (forward) (fvc _, fdc _) else (bvc _, bdc _)
-    val exprs = cols.map(c => limited(col(c), col(vc(c)), col(dc(c)), limit).as(c))
-    dropTmp(replace(filled, cols, exprs), cols)
-  }
-
-  private def linearKeyless(
-      df: DataFrame, cols: Seq[String], limit: Option[Int]): DataFrame = {
-    cols.foreach { c =>
-      require(df.schema(c).dataType.isInstanceOf[NumericType],
-        s"linear interpolation requires a numeric column, got $c")
-    }
-    val both = dirFill(dirFill(df, cols, forward = true), cols, forward = false)
-    val exprs = cols.map { cn =>
-      linearExpr(col(cn), df.schema(cn).dataType,
-        col(fvc(cn)), col(fdc(cn)), col(bvc(cn)), col(bdc(cn)), limit).as(cn)
-    }
-    dropTmp(replace(both, cols, exprs), cols)
-  }
-
-  private def dropTmp(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.drop(cols.flatMap(c => Seq(fvc(c), bvc(c), fdc(c), bdc(c))): _*)
-
-  /** Swap columns `cols` for `exprs` keeping all other columns + order. */
-  private def replace(df: DataFrame, cols: Seq[String], exprs: Seq[Column]): DataFrame = {
-    val m = cols.zip(exprs).toMap
-    df.select(df.columns.map(c => m.getOrElse(c, col(c)).as(c)).toIndexedSeq: _*)
   }
 }

@@ -3,6 +3,7 @@ package graft.windows
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{Carry, RunningScan}
 
 /** Per-column request for [[PrevNextValues]]: which output columns to emit
   * and what to fill at group edges (mirrors the `columns` dict of the
@@ -22,24 +23,27 @@ final case class PrevNextSpec(
   * requested columns with per-column fill values for group edges, plus
   * optional is-first / is-last indicators.
   *
-  * One `Window.partitionBy(groupBy).orderBy(sortBy)` serves every requested
-  * column — a single shuffle + sort regardless of how many columns are asked
-  * for. Row order of the result is not defined (Spark DataFrames are
-  * unordered); the reference's `keep_sorted`/`inplace` variants are order
-  * bookkeeping with no Spark counterpart.
-  *
-  * Scale note: with `groupBy = Nil` a naive `Window.partitionBy()` would
-  * move the whole table through one task. The keyless path instead
-  * range-partitions on `sortBy`, lags/leads within each partition in
-  * parallel, and stitches only the partition-boundary rows via a
-  * broadcast per-partition first/last-row summary (≤ #shuffle-partitions
-  * rows). A differential spec pins keyless ≡ grouped with a constant key.
+  * The result is one combine step over the same neighbour columns: each
+  * row's rank from the group's first and last row, and each requested
+  * column's previous and next value. With `groupBy` they are
+  * `row_number`/`lag`/`lead` over one `Window.partitionBy(groupBy)
+  * .orderBy(sortBy)` — a single shuffle + sort regardless of how many
+  * columns are asked for (a descending frame adds one sort for the
+  * last-row rank). Without `groupBy` they are [[RunningScan]] carries
+  * (a running count, the previous row's value, from the front and from
+  * the back) over one range exchange on `sortBy`, with no
+  * single-partition step. A differential spec pins keyless ≡ grouped with
+  * a constant key. Row order of the result is not defined (Spark
+  * DataFrames are unordered); the reference's `keep_sorted`/`inplace`
+  * variants are order bookkeeping with no Spark counterpart.
   */
 object PrevNextValues {
 
-  private val Pid = "__graft_pid"
+  // rank from the first / last row; previous / next value of column c
   private val RnA = "__graft_rna"
   private val RnD = "__graft_rnd"
+  private def lagC(c: String) = s"__graft_lag_$c"
+  private def leadC(c: String) = s"__graft_lead_$c"
 
   def apply(
       df: DataFrame,
@@ -52,112 +56,41 @@ object PrevNextValues {
     require(sortBy.nonEmpty, "sortBy must be non-empty")
     require(sortBy.intersect(groupBy).isEmpty,
       "sortBy and groupBy must be disjoint")
-    if (groupBy.isEmpty)
-      keyless(df, sortBy, columns, firstIndicatorName, lastIndicatorName)
-    else grouped(df, sortBy, groupBy, columns,
-      firstIndicatorName, lastIndicatorName)
-  }
-
-  private def grouped(
-      df: DataFrame,
-      sortBy: Seq[String],
-      groupBy: Seq[String],
-      columns: Map[String, PrevNextSpec],
-      firstIndicatorName: Option[String],
-      lastIndicatorName: Option[String]): DataFrame = {
-
-    val ord  = sortBy.map(c => col(c).asc_nulls_last)
-    val w    = Window.partitionBy(groupBy.map(col): _*).orderBy(ord: _*)
-    val wDesc = Window.partitionBy(groupBy.map(col): _*)
-      .orderBy(sortBy.map(c => col(c).desc_nulls_first): _*)
-
-    val withCols = columns.filter { case (c, _) => df.columns.contains(c) }
-      .foldLeft(df) { case (acc, (c, spec)) =>
-        val acc1 = spec.prevName.fold(acc) { n =>
-          val lagged = lag(col(c), 1).over(w)
-          acc.withColumn(n, spec.prevFill.fold(lagged)(f =>
-            when(row_number().over(w) === 1, f).otherwise(lagged)))
-        }
-        spec.nextName.fold(acc1) { n =>
-          val led = lead(col(c), 1).over(w)
-          acc1.withColumn(n, spec.nextFill.fold(led)(f =>
-            when(row_number().over(wDesc) === 1, f).otherwise(led)))
-        }
-      }
-
-    val withFirst = firstIndicatorName.fold(withCols)(n =>
-      withCols.withColumn(n, row_number().over(w) === 1))
-    lastIndicatorName.fold(withFirst)(n =>
-      withFirst.withColumn(n, row_number().over(wDesc) === 1))
-  }
-
-  /** Keyless lag/lead without a global window: per-partition lag/lead
-    * plus a carry join that supplies each partition-head row its
-    * predecessor (the previous partition's last row) and each
-    * partition-tail row its successor. A null carry struct marks the
-    * true global edge — only there do the edge fills / indicators apply;
-    * a carried row whose column value is data-null stays null, exactly
-    * as `lag` would report it.
-    */
-  private def keyless(
-      df: DataFrame,
-      sortBy: Seq[String],
-      columns: Map[String, PrevNextSpec],
-      firstIndicatorName: Option[String],
-      lastIndicatorName: Option[String]): DataFrame = {
-
+    val requested = columns.filter { case (c, _) => df.columns.contains(c) }
+    val prevs = requested.collect { case (c, s) if s.prevName.isDefined => c }.toSeq
+    val nexts = requested.collect { case (c, s) if s.nextName.isDefined => c }.toSeq
     val ord = sortBy.map(c => col(c).asc_nulls_last)
-    val reqCols = columns.keys.filter(df.columns.contains).toSeq.sorted
-    val cPrev = "__graft_cprev"; val cNext = "__graft_cnext"
 
-    val parts = df.repartitionByRange(ord: _*)
-      .withColumn(Pid, spark_partition_id())
-    val wLoc  = Window.partitionBy(col(Pid)).orderBy(ord: _*)
-    val wLocD = Window.partitionBy(col(Pid))
-      .orderBy(sortBy.map(c => col(c).desc_nulls_first): _*)
-    val withRn = parts
-      .withColumn(RnA, row_number().over(wLoc))
-      .withColumn(RnD, row_number().over(wLocD))
-
-    // each partition's boundary rows; empty struct is invalid, so pad
-    // when only indicators are requested
-    val valStruct =
-      if (reqCols.isEmpty) struct(lit(1).as("__graft_pad"))
-      else struct(reqCols.map(col): _*)
-    val summary = withRn.groupBy(col(Pid)).agg(
-      min_by(valStruct, col(RnA)).as("__graft_first"),
-      max_by(valStruct, col(RnA)).as("__graft_last"))
-    // ≤ #shuffle-partitions rows; empty range partitions have no summary
-    // row, so lag/lead over pid order links non-empty neighbors
-    val wPid = Window.orderBy(col(Pid))
-    val carry = summary
-      .withColumn(cPrev, lag(col("__graft_last"), 1).over(wPid))
-      .withColumn(cNext, lead(col("__graft_first"), 1).over(wPid))
-      .select(col(Pid), col(cPrev), col(cNext))
-    val j = withRn.join(broadcast(carry), Seq(Pid))
-
-    val withCols = columns.filter { case (c, _) => df.columns.contains(c) }
-      .foldLeft(j) { case (acc, (c, spec)) =>
-        val acc1 = spec.prevName.fold(acc) { n =>
-          val atHead = when(col(cPrev).isNull,
-              spec.prevFill.getOrElse(lit(null)))
-            .otherwise(col(cPrev).getField(c))
-          acc.withColumn(n,
-            when(col(RnA) === 1, atHead).otherwise(lag(col(c), 1).over(wLoc)))
-        }
-        spec.nextName.fold(acc1) { n =>
-          val atTail = when(col(cNext).isNull,
-              spec.nextFill.getOrElse(lit(null)))
-            .otherwise(col(cNext).getField(c))
-          acc1.withColumn(n,
-            when(col(RnD) === 1, atTail).otherwise(lead(col(c), 1).over(wLoc)))
-        }
+    val neighbours =
+      if (groupBy.nonEmpty) {
+        val w = Window.partitionBy(groupBy.map(col): _*).orderBy(ord: _*)
+        val wDesc = Window.partitionBy(groupBy.map(col): _*)
+          .orderBy(sortBy.map(c => col(c).desc_nulls_first): _*)
+        df.select(col("*") +: (Seq(row_number().over(w).as(RnA),
+            row_number().over(wDesc).as(RnD)) ++
+          prevs.map(c => lag(col(c), 1).over(w).as(lagC(c))) ++
+          nexts.map(c => lead(col(c), 1).over(w).as(leadC(c)))): _*)
+      } else {
+        val needRnD = lastIndicatorName.isDefined || requested.values.exists(_.nextFill.isDefined)
+        val previous = Carry.Last(ignoreNulls = false)
+        val scanned = RunningScan(df, ord, (Seq(RunningScan.Agg(RnA, Carry.Sum, lit(1L))) ++
+          (if (needRnD) Seq(RunningScan.Agg(RnD, Carry.Sum, lit(1L), suffix = true)) else Nil) ++
+          prevs.map(c => RunningScan.Agg(lagC(c), previous, col(c), inclusive = false)) ++
+          nexts.map(c => RunningScan.Agg(leadC(c), previous, col(c), suffix = true,
+            inclusive = false))): _*)
+        (prevs.map(lagC) ++ nexts.map(leadC)).foldLeft(scanned)((d, n) =>
+          d.withColumn(n, col(n).getField("v")))
       }
 
+    val withCols = requested.foldLeft(neighbours) { case (acc, (c, spec)) =>
+      val acc1 = spec.prevName.fold(acc)(n => acc.withColumn(n, spec.prevFill.fold(col(lagC(c)))(f =>
+        when(col(RnA) === 1, f).otherwise(col(lagC(c))))))
+      spec.nextName.fold(acc1)(n => acc1.withColumn(n, spec.nextFill.fold(col(leadC(c)))(f =>
+        when(col(RnD) === 1, f).otherwise(col(leadC(c))))))
+    }
     val withFirst = firstIndicatorName.fold(withCols)(n =>
-      withCols.withColumn(n, col(RnA) === 1 && col(cPrev).isNull))
-    val res = lastIndicatorName.fold(withFirst)(n =>
-      withFirst.withColumn(n, col(RnD) === 1 && col(cNext).isNull))
-    res.drop(Pid, RnA, RnD, cPrev, cNext)
+      withCols.withColumn(n, col(RnA) === 1))
+    lastIndicatorName.fold(withFirst)(n => withFirst.withColumn(n, col(RnD) === 1))
+      .drop(Seq(RnA, RnD) ++ prevs.map(lagC) ++ nexts.map(leadC): _*)
   }
 }

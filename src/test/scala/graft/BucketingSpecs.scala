@@ -116,17 +116,6 @@ class BucketingSpecs extends SparkSuite {
     }
   }
 
-  private def withConf[T](kv: (String, String))(body: => T): T = {
-    val (k, v) = kv
-    val old = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body
-    finally old match {
-      case Some(o) => spark.conf.set(k, o)
-      case None    => spark.conf.unset(k)
-    }
-  }
-
   // ── z-order layout ────────────────────────────────────────────────────
 
   test("layout compact: rewrites only over-fragmented partitions, " +

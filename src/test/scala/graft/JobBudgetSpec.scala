@@ -77,6 +77,29 @@ class JobBudgetSpec extends SparkSuite {
       col("day") % 17, budget = 64L))
   }
 
+  // each scan: the range exchange's sample and map jobs, one totals job
+  // per scan node (a suffix node adds one; group_intervals and
+  // combine_intervals chain two prefix nodes), the result, plus the
+  // events aggregate's and the segment aggregate's map jobs
+  // (combine_intervals)
+  test("keyless scans: job budgets and no persisted RDD left") {
+    val withV = orders.withColumn("v", when(col("okey") % 5 =!= 0, col("day").cast("double")))
+    val order = Seq(col("day"), col("okey"))
+    budget("keyless impute ffill limit", 4)(Ops.impute(withV, Seq("v"), "ffill",
+      orderBy = order, limit = Some(2)))
+    budget("keyless impute linear", 5)(Ops.impute(withV, Seq("v"), "linear", orderBy = order))
+    budget("keyless impute afill", 5)(Ops.impute(withV, Seq("v"), "afill", orderBy = order,
+      limit = Some(2)))
+    budget("keyless prevNextValues", 5)(Ops.prevNextValues(orders, Seq("day", "okey"), Nil,
+      Map("ckey" -> graft.windows.PrevNextSpec(Some("prev"), Some("next"))),
+      Some("is_first"), Some("is_last")))
+    budget("keyless groupIntervals", 5)(Ops.groupIntervals(
+      orders.select(col("okey"), col("day"), (col("day") + 3).as("stop")),
+      "day", Some("stop"), groupBy = Nil, distance = lit(1), tieBreakCols = Seq("okey")))
+    budget("keyless combineIntervals", 7)(Ops.combineIntervals(
+      orders.select(col("day"), (col("day") + 3).as("stop")), "day", Some("stop")))
+  }
+
   // write, append: the dimension probe, the repartition's map job and the
   // write; compact: the parquet schema read, the repartition's map job
   // and the write; search: the probe collect, the schema read, the

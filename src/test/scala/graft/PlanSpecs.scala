@@ -204,7 +204,7 @@ class PlanSpecs extends SparkSuite {
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.graft.RunningSumExec
+    import org.apache.spark.sql.graft.RunningScanExec
     val df = spark.range(5000).select(col("id"), (col("id") % 40).as("g"),
       (col("id") * 13 % 700).as("s"))
     val p = initialPlan(graft.Ops.groupIntervals(df, "s", None, groupBy = Seq("g"),
@@ -216,16 +216,17 @@ class PlanSpecs extends SparkSuite {
         assert(r.ordering.map(_.child.references.map(_.name).toSet) == Seq(Set("g")), p)
       case other => fail(s"not a range exchange: $other\n$p")
     }
-    assert(p.collect { case r: RunningSumExec => r }.size == 1, p)
+    assert(p.collect { case r: RunningScanExec => r }.size == 1, p)
   }
 
   test("prefix-sum users never plan a single-partition exchange") {
     import org.apache.spark.sql.functions._
     val df = spark.range(5000).select(col("id"), (col("id") % 40).as("g"),
-      (col("id") * 13 % 700).as("s"), (col("id") % 3).cast("string").as("f"))
+      (col("id") * 13 % 700).as("s"), (col("id") % 3).cast("string").as("f"),
+      when(col("id") % 4 =!= 0, col("id") * 0.5).as("v"))
     val users = Map(
-      "PrefixSum" -> graft.core.PrefixSum.inclusive(df, Seq(col("s"), col("id")),
-        col("g"), "cum"),
+      "PrefixSum" -> org.apache.spark.sql.graft.RunningScan.prefixSum(df,
+        Seq(col("s"), col("id")), col("g"), "cum"),
       "groupIntervals" -> graft.Ops.groupIntervals(df, "s", None, groupBy = Seq("g"),
         distance = lit(3)),
       "factorize" -> graft.Ops.factorize(df, Seq("f", "g")),
@@ -233,10 +234,20 @@ class PlanSpecs extends SparkSuite {
       "factorize joint" -> graft.agg.Factorize.joint(df, Seq("f"), df, Seq("g"))._2,
       "partitionSeries" -> graft.Ops.partitionSeries(df, Seq("g"), budget = 300L),
       "Packing.chunk" -> graft.text.Packing.chunk(df, Seq(col("s"), col("id")),
-        col("g"), budget = 64L))
+        col("g"), budget = 64L),
+      // the keyless scans: at the parent each planned a single partition
+      "keyless impute" -> graft.Ops.impute(df, Seq("v"), "lfill",
+        orderBy = Seq(col("id")), limit = Some(2)),
+      "keyless prevNextValues" -> graft.Ops.prevNextValues(df, Seq("s", "id"), Nil,
+        Map("v" -> graft.windows.PrevNextSpec(Some("pv"), Some("nv"), nextFill = Some(lit(0.0)))),
+        Some("first"), Some("last")),
+      "keyless groupIntervals" -> graft.Ops.groupIntervals(df, "s", None, groupBy = Nil,
+        distance = lit(3), tieBreakCols = Seq("id")),
+      "keyless combineIntervals" -> graft.Ops.combineIntervals(
+        df.withColumn("e", col("s") + col("g")), "s", Some("e")))
     for ((name, out) <- users) {
       val p = initialPlan(out).toString
-      assert(p.contains("RunningSum"), s"$name:\n$p")
+      assert(p.contains("RunningScan"), s"$name:\n$p")
       assert(!p.contains("SinglePartition"), s"$name:\n$p")
     }
   }

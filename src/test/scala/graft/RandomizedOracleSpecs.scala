@@ -255,31 +255,48 @@ class RandomizedOracleSpecs extends SparkSuite {
       }
     }
 
-    // lfill (no limit): linear, then ffill, then bfill — every null filled
-    val lf = graft.windows.Impute(df, Seq("v"), "lfill",
-      groupBy = Seq("g"), orderBy = Seq(col("rid").asc))
-      .select("rid", "v").collect()
-      .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
-    val wantLf = rows.groupBy(_._2).flatMap { case (_, rs) =>
-      val sorted = rs.sortBy(_._1)
-      val vs = sorted.map(r => Option(r._3).map(_.doubleValue)).toVector
-      val (f0, b0, lin) = fills(vs, None)
-      val afterLin = Vector.tabulate(vs.length)(i => vs(i).orElse(lin(i)))
-      val (f1, _, _) = fills(afterLin, None)
-      val (_, b1, _) = fills(f1, None)
-      sorted.map(_._1).zip(b1)
-    }
-    assert(lf.keySet == wantLf.keySet)
-    for ((k, w) <- wantLf) {
-      (lf(k), w) match {
-        case (None, None) => ()
-        case (Some(x), Some(y)) => assert(math.abs(x - y) < 1e-9, s"lfill rid=$k")
-        case other => fail(s"lfill rid=$k: $other")
+    // lfill: linear, then ffill, then bfill over each result (with no
+    // limit every null is filled)
+    for (limit <- Seq(None, Some(1), Some(2))) {
+      val lf = graft.windows.Impute(df, Seq("v"), "lfill",
+        groupBy = Seq("g"), orderBy = Seq(col("rid").asc), limit = limit)
+        .select("rid", "v").collect()
+        .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
+      val wantLf = rows.groupBy(_._2).flatMap { case (_, rs) =>
+        val sorted = rs.sortBy(_._1)
+        val vs = sorted.map(r => Option(r._3).map(_.doubleValue)).toVector
+        val (_, _, lin) = fills(vs, limit)
+        val afterLin = Vector.tabulate(vs.length)(i => vs(i).orElse(lin(i)))
+        val (f1, _, _) = fills(afterLin, limit)
+        val (_, b1, _) = fills(f1, limit)
+        sorted.map(_._1).zip(b1)
+      }
+      assert(lf.keySet == wantLf.keySet)
+      for ((k, w) <- wantLf) {
+        (lf(k), w) match {
+          case (None, None) => ()
+          case (Some(x), Some(y)) => assert(math.abs(x - y) < 1e-9, s"lfill limit=$limit rid=$k")
+          case other => fail(s"lfill limit=$limit rid=$k: $other")
+        }
       }
     }
   }
 
-  test("keyless impute (two-phase carry) ≡ grouped impute with a constant key") {
+  /** The rows of `cols`, in a canonical order. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+    df.select(cols.map(col): _*).collect().map(_.toSeq.toList).toList.sortBy(_.mkString("|"))
+
+  /** `run` without keys ≡ `run` grouped by one constant key, on `cols`;
+    * returns the rows. */
+  private def keylessAsGrouped(df: org.apache.spark.sql.DataFrame, cols: Seq[String],
+      clue: String)(run: (org.apache.spark.sql.DataFrame, Seq[String]) =>
+        org.apache.spark.sql.DataFrame): List[List[Any]] = {
+    val want = rowsOf(run(df.withColumn("one", lit(1)), Seq("one")), cols)
+    assert(rowsOf(run(df, Nil), cols) == want, clue)
+    want
+  }
+
+  spreadTest("keyless impute (two-phase carry) ≡ grouped impute with a constant key") {
     // the keyless path range-partitions the global order and fixes up
     // cross-partition donors from a carry summary; the grouped path with
     // one constant key is the single-window oracle for the same semantics.
@@ -338,7 +355,7 @@ class RandomizedOracleSpecs extends SparkSuite {
     }
   }
 
-  test("keyless prev_next_values (boundary carry) ≡ grouped with a constant key") {
+  spreadTest("keyless prev_next_values (boundary carry) ≡ grouped with a constant key") {
     // the keyless path range-partitions on sortBy and stitches partition
     // heads/tails from a per-partition first/last-row summary; grouped
     // with one constant key is the single-window oracle. Data nulls in v
@@ -365,6 +382,66 @@ class RandomizedOracleSpecs extends SparkSuite {
     val keyless = run(df, Nil)
     val oracle  = run(df.withColumn("one", lit(1)), Seq("one"))
     assert(keyless == oracle)
+  }
+
+  spreadTest("keyless group_intervals (max scan) ≡ grouped with a constant key") {
+    // null starts sort last; ties on start fall to the tie-break columns,
+    // else to the row id both paths number the same input with
+    val rnd = new scala.util.Random(53)
+    val df = (0 until 600).map { i =>
+      val s = if (rnd.nextInt(12) == 0) None else Some(rnd.nextInt(4000).toDouble)
+      (i.toLong, rnd.nextInt(3), s, s.map(_ + rnd.nextInt(6)))
+    }.toDF("id", "tb", "s", "e")
+    for (inclusive <- Seq(true, false); tie <- Seq(Nil, Seq("tb", "id"))) {
+      val got = keylessAsGrouped(df, Seq("id", "interval_group"),
+          s"inclusive=$inclusive tie=$tie") { (d, g) =>
+        GroupIntervals(d, "s", Some("e"), groupBy = g, distance = lit(1.0),
+          inclusive = inclusive, tieBreakCols = tie)
+      }
+      assert(got.map(_(1)).distinct.size > 7, "too few clusters to cross partitions")
+    }
+  }
+
+  spreadTest("keyless combine_intervals (depth and segment scans) ≡ grouped with a constant key") {
+    val rnd = new scala.util.Random(59)
+    val df = (0 until 500).map { i =>
+      val s = rnd.nextInt(2000).toDouble
+      (i.toLong, s, s + rnd.nextInt(12), rnd.nextInt(3))
+    }.toDF("id", "s", "e", "a")
+    for ((nMin, nMax, attrs) <- Seq((1, None, Nil), (0, Some(0), Nil), (2, None, Nil),
+        (1, None, Seq("a")), (2, None, Seq("a")))) {
+      val got = keylessAsGrouped(df, Seq("s", "e"), s"nMin=$nMin nMax=$nMax attrCols=$attrs") {
+        (d, g) => CombineIntervals(d, "s", Some("e"), attrCols = attrs, groupBy = g,
+          nMin = nMin, nMax = nMax)
+      }
+      assert(got.size > 7, s"nMin=$nMin nMax=$nMax attrCols=$attrs: ${got.size} intervals")
+    }
+  }
+
+  spreadTest("keyless scans on empty, one-row and all-null inputs ≡ grouped with a constant key") {
+    import graft.windows.{Impute, PrevNextSpec, PrevNextValues}
+    val shapes = Seq[(String, Seq[(Long, Option[Double], Option[Double])])](
+      "empty" -> Nil,
+      "one row" -> Seq((1L, Some(2.0), Some(4.0))),
+      "all null" -> (0 until 20).map(i => (i.toLong, None, None)))
+    for ((shape, rows) <- shapes) {
+      val df = rows.toDF("id", "s", "e")
+      for ((method, limit) <- Seq(("ffill", Some(1)), ("bfill", None), ("afill", Some(1)),
+          ("linear", None), ("lfill", Some(1))))
+        keylessAsGrouped(df, Seq("id", "s", "e"), s"$shape impute $method") { (d, g) =>
+          Impute(d, Seq("s", "e"), method, g, Seq(col("id")), limit)
+        }
+      keylessAsGrouped(df, Seq("id", "ps", "ns", "f", "l"), s"$shape prev_next") { (d, g) =>
+        PrevNextValues(d, Seq("id"), g, Map("s" -> PrevNextSpec(Some("ps"), Some("ns"),
+          Some(lit(-1.0)), Some(lit(-2.0)))), Some("f"), Some("l"))
+      }
+      keylessAsGrouped(df, Seq("id", "interval_group"), s"$shape group_intervals") { (d, g) =>
+        GroupIntervals(d, "s", Some("e"), groupBy = g, distance = lit(1.0))
+      }
+      keylessAsGrouped(df, Seq("s", "e"), s"$shape combine_intervals") { (d, g) =>
+        CombineIntervals(d, "s", Some("e"), groupBy = g)
+      }
+    }
   }
 
   test("grouped_mode ≡ counting oracle (dropna both ways)") {

@@ -1,13 +1,14 @@
 package graft
 
 import graft.agg.Factorize
-import graft.core.{PartitionSeries, PrefixSum}
+import graft.core.PartitionSeries
 import graft.intervals.GroupIntervals
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RunningScan
 
-/** The running-sum operator behind [[PrefixSum]] (and so behind
+/** The running sum of [[RunningScan]] (`RunningScan.prefixSum`, behind
   * GroupIntervals, Factorize, PartitionSeries and Packing), checked
   * against its definition: `sum(v) OVER (ORDER BY keys ROWS UNBOUNDED
   * PRECEDING)`, a window that runs every row through one partition.
@@ -18,7 +19,7 @@ class RunningSumSpec extends SparkSuite {
   /** key -> (got, want) for every row; keys are unique per row. */
   private def compare(df: DataFrame, order: Seq[Column],
       value: Column = col("v")): Seq[(Any, Any, Any)] = {
-    val got = PrefixSum.inclusive(df, order, value, "cum")
+    val got = RunningScan.prefixSum(df, order, value, "cum")
       .select("k", "cum").collect().map(r => r.get(0) -> r.get(1)).toMap
     val want = df.withColumn("want", sum(value).over(Window.orderBy(order: _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -29,22 +30,6 @@ class RunningSumSpec extends SparkSuite {
 
   private def assertExact(df: DataFrame, order: Seq[Column], clue: String): Unit =
     for ((k, g, w) <- compare(df, order)) assert(g == w, s"$clue key=$k")
-
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  /** A test whose exchanges keep 7 partitions, so partition boundaries
-    * (and partitions that begin with null values) occur on small inputs. */
-  private def spreadTest(name: String)(body: => Unit): Unit = test(name) {
-    withConf("spark.sql.shuffle.partitions" -> "7",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(body)
-  }
 
   /** n rows with unique keys from `key` (index 0 is the null key) and
     * values that are null about one time in four, in `parts` partitions. */
@@ -76,7 +61,7 @@ class RunningSumSpec extends SparkSuite {
     val df = (0 until 400).map(i => (i, if (i >= 200) None else Some(1L)))
       .toDF("k", "v").repartition(8)
     assertExact(df, Seq(col("k")), "null tail")
-    val got = PrefixSum.inclusive(df, Seq(col("k")), col("v"), "cum")
+    val got = RunningScan.prefixSum(df, Seq(col("k")), col("v"), "cum")
       .filter(col("k") >= 200).select("cum").distinct().as[Long].collect()
     assert(got.toSeq == Seq(200L))
     // and all-null values sum to null everywhere
@@ -86,7 +71,7 @@ class RunningSumSpec extends SparkSuite {
 
   test("PrefixSum edge shapes: empty input, one row, more shuffle partitions than rows") {
     val empty = Seq.empty[(Int, Long)].toDF("k", "v")
-    assert(PrefixSum.inclusive(empty, Seq(col("k")), col("v"), "cum").count() == 0)
+    assert(RunningScan.prefixSum(empty, Seq(col("k")), col("v"), "cum").count() == 0)
     assertExact(Seq((7, 3L)).toDF("k", "v"), Seq(col("k")), "one row")
     withConf("spark.sql.shuffle.partitions" -> "64",
         "spark.sql.adaptive.enabled" -> "false") {
@@ -104,7 +89,7 @@ class RunningSumSpec extends SparkSuite {
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16k") {
       val df = frame(6, 2000, 6)(i => if (i == 0) None else Some(i))
       assertExact(df, Seq(col("k")), "coalesced")
-      val out = PrefixSum.inclusive(df, Seq(col("k")), col("v"), "cum")
+      val out = RunningScan.prefixSum(df, Seq(col("k")), col("v"), "cum")
       out.collect()
       val reads = out.queryExecution.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan.collect {
@@ -128,7 +113,7 @@ class RunningSumSpec extends SparkSuite {
     }
     val dec = df.withColumn("v", col("v").cast("decimal(12,4)"))
     assertExact(dec, Seq(col("k")), "decimal")
-    assert(PrefixSum.inclusive(dec, Seq(col("k")), col("v"), "cum")
+    assert(RunningScan.prefixSum(dec, Seq(col("k")), col("v"), "cum")
       .schema("cum").dataType == org.apache.spark.sql.types.DecimalType(22, 4))
   }
 
@@ -137,7 +122,7 @@ class RunningSumSpec extends SparkSuite {
     val rows = (0 until 500).map(i => (rnd.nextInt(1000000), i.toLong % 7 + 1))
       .distinctBy(_._1) // unique keys required by the contract
     val df = rows.toDF("k", "n").repartition(13)
-    val got = PrefixSum.inclusive(df, Seq(col("k")), col("n"), "cum")
+    val got = RunningScan.prefixSum(df, Seq(col("k")), col("n"), "cum")
       .orderBy("k").collect().map(r => r.getInt(0) -> r.getLong(2))
     val want = rows.sortBy(_._1)
       .scanLeft((0, 0L)) { case ((_, acc), (k, n)) => (k, acc + n) }.drop(1)
