@@ -1,7 +1,7 @@
 package graft.resample
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType, LongType, TimestampNTZType, TimestampType}
 
@@ -37,21 +37,33 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, LongType, TimestampNTZ
   * `resampling.py:1272-1400`, which is an execution-memory workaround Spark
   * does not need — AQE and spillable hash aggregation take its place):
   * one equi-join on entity with the time-containment range conjunct as
-  * post-filter, then up to three aggregation family plans over the joined
-  * long frame — standard (single hash agg, with an analytic-window mean
-  * pre-pass only when `mad` is requested), mode (count + window top-1), and
-  * rank (two `row_number` window passes sharing one shuffle) — merged on
-  * `(window, attribute)` and pivoted to wide columns by conditional
-  * aggregation. Every shuffle is keyed by the window id, so partial
-  * aggregation happens map-side and skew is handled by AQE.
+  * post-filter, then ONE aggregation keyed by `(window, attribute)` over
+  * the joined long frame computes every requested aggregation, custom ones
+  * included. The holistic ones read per-row helpers that at most two
+  * window sorts under one `(window, attribute)` shuffle attach first: by
+  * value (the value rank and non-null count for exact `pXX`; the count of
+  * equal values and the group's top count for `mode`), and by (time, row
+  * id) (the rank and row count for `rXX`/`tXX`); `mad` reads the group
+  * mean from whichever of them runs. One conditional-aggregation pivot
+  * keyed by window then widens the result onto the windows frame.
   */
 object ResampleEav {
 
-  private val Wid   = "__graft_wid"
-  private val Attr  = "__graft_attr"
+  import WindowPivot.{Attr, Wid, notNaN}
+
   private val Oid   = "__graft_oid"
   private val VCol  = "__graft_v"
   private val TCol  = "__graft_t"
+  // per-row helpers: rank by (time, oid) and the group's row count; rank
+  // by value, non-null count, count of equal values and its group max;
+  // group mean
+  private val TRank = "__graft_trn"
+  private val TN    = "__graft_tn"
+  private val VRank = "__graft_vrn"
+  private val VN    = "__graft_vn"
+  private val VCnt  = "__graft_vcnt"
+  private val VTop  = "__graft_vtop"
+  private val VMean = "__graft_vmean"
 
   private val PercentRe = """p(\d+(?:\.\d+)?)""".r
   private val RankRe    = """([rt])(-?\d+)""".r
@@ -133,232 +145,156 @@ object ResampleEav {
         a -> gs.map(g => g -> parse(g))
       }
     val kinds: Seq[AggKind] = spec.flatMap(_._2.map(_._2)).distinct
+    val custom: Seq[(String, CustomAgg.Spec)] = for {
+      (a, specs) <- customAgg.toSeq.sortBy(_._1)
+      s          <- specs
+    } yield a -> s
     val allAttrs: Seq[String] =
       (agg.keySet ++ customAgg.keySet).toSeq.sorted
 
-    // ── normalize observations ──────────────────────────────────────────
-    // NaN values are NA in pandas but ordinary (maximal) values to Spark
-    // aggregates — normalize NaN→null at ingress (SURVEY.md §7.4).
-    val vIsFloat = obs.schema(valueCol).dataType match {
-      case DoubleType | FloatType => true
-      case _                      => false
+    val (w0, joined) = windowed(obs, windows, timeCol, valueCol, entityCol,
+      attrCol, wStartCol, wStopCol, includeStart, includeStop,
+      allAttrs, allAttrs.head, (_, c) => col(c))
+    val v = col(VCol)
+
+    // ── per-row helpers of the holistic aggregations ────────────────────
+    // Both orders partition by (wid, attr), so one shuffle serves them.
+    // Each step is one window pass: the rank order sorts, then the value
+    // order sorts, and the whole-group helpers ride on the last sort.
+    val needRank = kinds.exists(_.isInstanceOf[Rank])
+    val needPct  = !approx && kinds.exists(_.isInstanceOf[Pct])
+    val needMode = kinds.exists(k => k == Mode || k == ModeCount)
+    val group = Window.partitionBy(Wid, Attr)
+    val byT = group.orderBy(col(TCol), col(Oid))
+    val byV = group.orderBy(v.asc_nulls_last)
+    def all(w: WindowSpec): WindowSpec =
+      w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val whole = all(if (needPct || needMode) byV else if (needRank) byT else group)
+    def onlyIf(need: Boolean)(hs: (String, Column)*): Seq[(String, Column)] =
+      if (need) hs else Nil
+    val steps = Seq(
+      onlyIf(needRank)(TRank -> row_number().over(byT), TN -> count(lit(1)).over(all(byT))),
+      onlyIf(needPct)(VRank -> row_number().over(byV), VN -> count(v).over(whole)) ++
+        onlyIf(needMode)(VCnt ->
+          count(v).over(byV.rangeBetween(Window.currentRow, Window.currentRow))),
+      onlyIf(needMode)(VTop -> max(col(VCnt)).over(whole)) ++
+        onlyIf(kinds.contains(Std("mad")))(VMean -> avg(v).over(whole)))
+    val base = steps.filter(_.nonEmpty)
+      .foldLeft(joined)((d, hs) => d.withColumns(hs.toMap))
+
+    // ── one aggregation keyed by (wid, attr) ────────────────────────────
+    val n = count(v)
+    def aggOf(kind: AggKind): Column = kind match {
+      case Std("mean") => avg(v)
+      case Std("min")  => min(v)
+      case Std("max")  => max(v)
+      case Std("sum")  => sum(v)
+      case Std("prod") => product(v)
+      case Std("std")  => when(n >= 2, stddev_samp(v))
+      case Std("var")  => when(n >= 2, var_samp(v))
+      case Std("sem")  => when(n >= 2, stddev_samp(v) / sqrt(n))
+      case Std("skew") =>
+        when(n >= 3, skewness(v) * sqrt(n.cast(DoubleType) * (n - 1)) / (n - 2))
+      case Std("mad")  => avg(abs(v - col(VMean)))
+      case Std("size") => count(lit(1))
+      case Std("count") => n
+      case Std(_)      => // nunique
+        if (approx) approx_count_distinct(v) else count_distinct(v)
+      case Pct(q) if approx => percentile_approx(v, lit(q), lit(10000))
+      case Pct(q) =>
+        // exact pXX by pandas' linear interpolation lower + (upper−lower)·g
+        // over the value ranks — hash aggregation over a spillable sort,
+        // where the built-in `percentile` (a TypedImperativeAggregate)
+        // buffers every value per group and falls back to sort-based
+        // aggregation beyond 128 in-memory groups. pos = (n−1)·q is
+        // constant within the group, so the floor/ceil rank hits are
+        // per-row predicates.
+        val pos = (col(VN) - 1).cast(DoubleType) * lit(q)
+        val lo = max(when(col(VRank) === (floor(pos) + 1), v))
+        val hi = max(when(col(VRank) === (ceil(pos) + 1), v))
+        lo + (hi - lo) * (max(pos) - floor(max(pos)))
+      case Rank(k, time) =>
+        // the k-th from the end is the group's row count − k + 1
+        val hit = col(TRank) === (if (k >= 0) lit(k + 1) else col(TN) + (k + 1))
+        max(when(hit, if (time) col(TCol) else v))
+      // ties: the most frequent value, the smallest of those
+      case Mode      => min(when(col(VCnt) === col(VTop), v))
+      case ModeCount => max(col(VCnt))
     }
-    val vNorm =
-      if (vIsFloat) when(isnan(col(valueCol)), lit(null)).otherwise(col(valueCol))
-      else col(valueCol)
+    val aggCols: Seq[Column] =
+      kinds.zipWithIndex.map { case (k, i) => aggOf(k).as(s"__graft_k$i") } ++
+        custom.zipWithIndex.map { case ((_, (_, f)), i) => f(v, col(TCol)).as(s"__graft_x$i") }
+    val perAttr = base.groupBy(col(Wid), col(Attr)).agg(aggCols.head, aggCols.tail: _*)
 
-    // NaN sorts ABOVE +Inf in Spark, so a NaN time/endpoint would pass
-    // `<`/`<=` guards that nulls fail — treat NaN as NA explicitly
-    // (pandas isna covers NaN; SURVEY.md §7.4)
-    def notNaN(df0: DataFrame, c: String): Column =
-      df0.schema(c).dataType match {
-        case DoubleType | FloatType => !isnan(col(c))
-        case _                      => lit(true)
-      }
+    // ── pivot to wide; count-likes are 0, not null, for empty windows ───
+    val slot = kinds.zipWithIndex.toMap
+    val cells = (for {
+      (a, gs)    <- spec
+      (gName, k) <- gs
+    } yield WindowPivot.Cell(s"${a}_$gName", a, s"__graft_k${slot(k)}",
+      if (CountLike(gName)) c => coalesce(c.cast(LongType), lit(0L)) else identity)) ++
+      custom.zipWithIndex.map { case ((a, (nm, _)), i) =>
+        WindowPivot.Cell(s"${a}_$nm", a, s"__graft_x$i") }
+    WindowPivot(w0, perAttr, cells)
+  }
 
-    val attrExpr = attrCol.map(col).getOrElse(lit(allAttrs.head))
-    val obsKeep = Seq(
-      Some(col(timeCol).isNotNull && notNaN(obs, timeCol)),
-      attrCol.map(a => col(a).isin(allAttrs: _*))
-    ).flatten.reduce(_ && _)
-
+  /** The windows with their id, and one row (wid, attr, time, value, row
+    * id) per observation inside a window: NaN values become null, rows
+    * with an NA time (or an attribute outside `attrs`, when given) are
+    * dropped, and a window with an NA endpoint contains nothing. `time`
+    * maps the observation time and the window endpoints to the type
+    * they are compared (and returned) in.
+    */
+  private def windowed(
+      obs: DataFrame,
+      windows: DataFrame,
+      timeCol: String,
+      valueCol: String,
+      entityCol: Option[String],
+      attrCol: Option[String],
+      wStartCol: Option[String],
+      wStopCol: Option[String],
+      includeStart: Boolean,
+      includeStop: Boolean,
+      attrs: Seq[String],
+      defaultAttr: String,
+      time: (DataFrame, String) => Column): (DataFrame, DataFrame) = {
+    // NaN values are NA in pandas but ordinary (maximal) values to Spark
+    // aggregates — normalize NaN→null at ingress (SURVEY.md §7.4)
+    val vNorm = obs.schema(valueCol).dataType match {
+      case DoubleType | FloatType =>
+        when(isnan(col(valueCol)), lit(null)).otherwise(col(valueCol))
+      case _ => col(valueCol)
+    }
+    val obsKeep = (Seq(col(timeCol).isNotNull && notNaN(obs, timeCol)) ++
+      attrCol.filter(_ => attrs.nonEmpty).map(a => col(a).isin(attrs: _*)))
+      .reduce(_ && _)
+    val ePrefix = "__graft_e_"
     val obsN = obs
       .filter(obsKeep)
       .withColumn(Oid, monotonically_increasing_id())
       .select(
-        (entityCol.map(col).toSeq :+
-          attrExpr.as(Attr) :+ col(timeCol).as(TCol) :+
-          vNorm.as(VCol) :+ col(Oid)): _*)
-
-    val w0 = windows.withColumn(Wid, monotonically_increasing_id())
+        (entityCol.map(e => col(e).as(ePrefix + e)).toSeq :+
+          attrCol.map(col).getOrElse(lit(defaultAttr)).as(Attr) :+
+          time(obs, timeCol).as(TCol) :+ vNorm.as(VCol) :+ col(Oid)): _*)
 
     // ── join: entity equality + time ∈ window ───────────────────────────
-    val ePrefix = "__graft_e_"
-    val obsR = entityCol.fold(obsN)(e => obsN.withColumnRenamed(e, ePrefix + e))
+    val w0 = WindowPivot.withId(windows)
     val keyCond = entityCol.map(e => col(e) === col(ePrefix + e))
     val lo = wStartCol.map(c =>
-      (if (includeStart) col(c) <= col(TCol) else col(c) < col(TCol)) &&
-        notNaN(windows, c))
+      (if (includeStart) time(windows, c) <= col(TCol)
+       else time(windows, c) < col(TCol)) && notNaN(windows, c))
     val hi = wStopCol.map(c =>
-      (if (includeStop) col(TCol) <= col(c) else col(TCol) < col(c)) &&
-        notNaN(windows, c))
+      (if (includeStop) col(TCol) <= time(windows, c)
+       else col(TCol) < time(windows, c)) && notNaN(windows, c))
     val cond = (keyCond.toSeq ++ lo ++ hi).reduce(_ && _)
 
     val joined = w0
       .select((col(Wid) +: (entityCol.map(col).toSeq ++ wStartCol.map(col) ++ wStopCol.map(col))): _*)
-      .join(obsR, cond, "inner")
+      .join(obsN, cond, "inner")
       .select(col(Wid), col(Attr), col(TCol), col(VCol), col(Oid))
-
-    val v = col(VCol)
-
-    // ── family A: standard aggs (one hash agg; mad needs a mean pre-pass)
-    val stdKeys: Seq[String] = kinds.collect { case Std(n) => n }
-    val pcts: Seq[Double]    = kinds.collect { case Pct(q) => q }
-    val needMad = stdKeys.contains("mad")
-
-    val famStd: Option[DataFrame] =
-      if (stdKeys.isEmpty && pcts.isEmpty) None
-      else {
-        // exact pXX via a per-group sort + row_number + linear
-        // interpolation (pandas formula: lower + (upper-lower)·g). The
-        // built-in `percentile` is a TypedImperativeAggregate that buffers
-        // every value per group and falls back to sort-based aggregation
-        // beyond 128 in-memory groups — this plan stays inside
-        // whole-stage-codegen hash aggregation + a spillable Tungsten
-        // sort, which survives memory pressure at scale.
-        val needExactPct = pcts.nonEmpty && !approx
-        val base0 =
-          if (needMad)
-            joined.withColumn("__graft_vmean",
-              avg(v).over(Window.partitionBy(Wid, Attr)))
-          else joined
-        val base =
-          if (needExactPct) {
-            val byV = Window.partitionBy(Wid, Attr).orderBy(v.asc_nulls_last)
-            base0
-              .withColumn("__graft_vrn", row_number().over(byV))
-              .withColumn("__graft_vn",
-                count(v).over(Window.partitionBy(Wid, Attr)))
-          } else base0
-        val n  = count(v)
-        val exprs: Seq[Column] = stdKeys.map {
-          case "mean" => avg(v).as("mean")
-          case "min"  => min(v).as("min")
-          case "max"  => max(v).as("max")
-          case "sum"  => sum(v).as("sum")
-          case "prod" => product(v).as("prod")
-          case "std"  => when(n >= 2, stddev_samp(v)).as("std")
-          case "var"  => when(n >= 2, var_samp(v)).as("var")
-          case "sem"  => when(n >= 2, stddev_samp(v) / sqrt(n)).as("sem")
-          case "skew" =>
-            when(n >= 3,
-              skewness(v) * sqrt(n.cast(DoubleType) * (n - 1)) / (n - 2))
-              .as("skew")
-          case "mad"  => avg(abs(v - col("__graft_vmean"))).as("mad")
-          case "size" => count(lit(1)).as("size")
-          case "count"   => n.as("count")
-          case "nunique" =>
-            (if (approx) approx_count_distinct(v) else count_distinct(v))
-              .as("nunique")
-        } ++ (
-          if (approx)
-            pcts.map(q => percentile_approx(v, lit(q), lit(10000)).as(pctName(q)))
-          else
-            pcts.flatMap { q =>
-              // per-row: pos = (n-1)·q is constant within the group, so the
-              // floor/ceil rank hits are per-row predicates and the whole
-              // family reduces to conditional max()es
-              val pos = (col("__graft_vn") - 1).cast(DoubleType) * lit(q)
-              Seq(
-                max(when(col("__graft_vrn") === (floor(pos) + 1), v))
-                  .as(s"__graft_plo_${pctName(q)}"),
-                max(when(col("__graft_vrn") === (ceil(pos) + 1), v))
-                  .as(s"__graft_phi_${pctName(q)}"),
-                (max(pos) - floor(max(pos))).as(s"__graft_pg_${pctName(q)}"))
-            })
-        val aggd = base.groupBy(col(Wid), col(Attr)).agg(exprs.head, exprs.tail: _*)
-        val withPct =
-          if (approx || pcts.isEmpty) aggd
-          else pcts.foldLeft(aggd) { (d, q) =>
-            val nm = pctName(q)
-            d.withColumn(nm,
-                col(s"__graft_plo_$nm") +
-                  (col(s"__graft_phi_$nm") - col(s"__graft_plo_$nm")) *
-                  col(s"__graft_pg_$nm"))
-              .drop(s"__graft_plo_$nm", s"__graft_phi_$nm", s"__graft_pg_$nm")
-          }
-        Some(withPct)
-      }
-
-    // ── family B: mode (deterministic ties: count desc, value asc) ──────
-    val famMode: Option[DataFrame] =
-      if (!kinds.exists(k => k == Mode || k == ModeCount)) None
-      else {
-        val counts = joined.filter(v.isNotNull)
-          .groupBy(col(Wid), col(Attr), v).agg(count(lit(1)).as("__graft_n"))
-        val rankW = Window.partitionBy(Wid, Attr)
-          .orderBy(col("__graft_n").desc, v.asc)
-        Some(counts
-          .withColumn("__graft_rn", row_number().over(rankW))
-          .filter(col("__graft_rn") === 1)
-          .select(col(Wid), col(Attr),
-            v.as("mode"), col("__graft_n").as("mode_count")))
-      }
-
-    // ── family C: rank aggs (rXX/tXX; ties by (time, oid)) ──────────────
-    val ranks: Seq[Int] = kinds.collect { case Rank(k, _) => k }.distinct
-    val famRank: Option[DataFrame] =
-      if (ranks.isEmpty) None
-      else {
-        val asc  = Window.partitionBy(Wid, Attr).orderBy(col(TCol).asc, col(Oid).asc)
-        val desc = Window.partitionBy(Wid, Attr).orderBy(col(TCol).desc, col(Oid).desc)
-        val withRn = joined
-          .withColumn("__graft_ra", row_number().over(asc))
-          .withColumn("__graft_rd", row_number().over(desc))
-        val exprs: Seq[Column] = ranks.flatMap { k =>
-          val hit =
-            if (k >= 0) col("__graft_ra") === (k + 1)
-            else col("__graft_rd") === -k
-          Seq(
-            max(when(hit, v)).as(rankName(k, time = false)),
-            max(when(hit, col(TCol))).as(rankName(k, time = true)))
-        }
-        Some(withRn.groupBy(col(Wid), col(Attr)).agg(exprs.head, exprs.tail: _*))
-      }
-
-    // ── family D: custom aggregations (CustomAgg.Spec hooks) ────────────
-    val famCustom: Option[DataFrame] =
-      if (customAgg.isEmpty) None
-      else {
-        val exprs: Seq[Column] = for {
-          (a, specs) <- customAgg.toSeq.sortBy(_._1)
-          (nm, f)    <- specs
-        } yield f(v, col(TCol)).as(s"cust__${a}__$nm")
-        Some(joined.groupBy(col(Wid), col(Attr)).agg(exprs.head, exprs.tail: _*))
-      }
-
-    // ── merge families on (wid, attr); all are small (≤ windows×attrs) ──
-    val fams = Seq(famStd, famMode, famRank, famCustom).flatten
-    val merged = fams.reduce((a, b) => a.join(b, Seq(Wid, Attr), "full_outer"))
-
-    // ── pivot to wide by conditional aggregation ────────────────────────
-    def famCol(kind: AggKind): String = kind match {
-      case Std(nm)     => nm
-      case Pct(q)      => pctName(q)
-      case Rank(k, t)  => rankName(k, t)
-      case Mode        => "mode"
-      case ModeCount   => "mode_count"
-    }
-    val pivotExprs: Seq[Column] = (for {
-      (a, gs)    <- spec
-      (gName, k) <- gs
-    } yield max(when(col(Attr) === a, col(famCol(k)))).as(s"${a}_$gName")) ++
-      (for {
-        (a, specs) <- customAgg.toSeq.sortBy(_._1)
-        (nm, _)    <- specs
-      } yield max(when(col(Attr) === a, col(s"cust__${a}__$nm"))).as(s"${a}_$nm"))
-
-    val wide = merged.groupBy(col(Wid))
-      .agg(pivotExprs.head, pivotExprs.tail: _*)
-
-    val out = w0.join(wide, Seq(Wid), "left")
-    val filled = spec.foldLeft(out) { case (d, (a, gs)) =>
-      gs.foldLeft(d) { case (d2, (gName, _)) =>
-        if (CountLike(gName))
-          d2.withColumn(s"${a}_$gName",
-            coalesce(col(s"${a}_$gName").cast(LongType), lit(0L)))
-        else d2
-      }
-    }
-    filled.drop(Wid)
+    (w0, joined)
   }
-
-  private def pctName(q: Double): String = {
-    val x = q * 100
-    if (x == x.floor) s"p${x.toInt}" else s"p$x"
-  }
-  private def rankName(k: Int, time: Boolean): String =
-    (if (time) "t" else "r") + k.toString
 
   /** One observation handed to the [[flatMapWindows]] callable: attribute
     * plus time and value cast to double (timestamps become epoch
@@ -404,60 +340,21 @@ object ResampleEav {
 
     import org.apache.spark.sql.{Encoder, Encoders}
 
-    val vIsFloat = obs.schema(valueCol).dataType match {
-      case DoubleType | FloatType => true
-      case _                      => false
-    }
-    val vNorm =
-      if (vIsFloat) when(isnan(col(valueCol)), lit(null)).otherwise(col(valueCol))
-      else col(valueCol)
-    def notNaN(df0: DataFrame, c: String): Column =
-      df0.schema(c).dataType match {
-        case DoubleType | FloatType => !isnan(col(c))
-        case _                      => lit(true)
-      }
-
     // TIMESTAMP_NTZ has no direct double cast — hop through TIMESTAMP
-    // (session timezone is fixed, so the hop is deterministic)
+    // (session timezone is fixed, so the hop is deterministic); the
+    // window endpoints are compared in the same double space (epoch
+    // micros fit double's 53-bit mantissa, so the cast is exact)
     def asDouble(df0: DataFrame, c: String): Column =
       df0.schema(c).dataType match {
         case TimestampNTZType => col(c).cast(TimestampType).cast("double")
         case _                => col(c).cast("double")
       }
 
-    val attrExpr = attrCol.map(col).getOrElse(lit(""))
-    val obsKeep = (Seq(col(timeCol).isNotNull && notNaN(obs, timeCol)) ++
-      (if (attributes.nonEmpty) attrCol.map(a => col(a).isin(attributes: _*))
-       else None)).reduce(_ && _)
-    val obsN = obs
-      .filter(obsKeep)
-      .select(
-        (entityCol.map(col).toSeq :+
-          attrExpr.cast("string").as(Attr) :+
-          asDouble(obs, timeCol).as(TCol) :+
-          coalesce(vNorm.cast("double"), lit(Double.NaN)).as(VCol)): _*)
-
-    val w0 = windows.withColumn(Wid, monotonically_increasing_id())
-    val ePrefix = "__graft_e_"
-    val obsR = entityCol.fold(obsN)(e => obsN.withColumnRenamed(e, ePrefix + e))
-    val keyCond = entityCol.map(e => col(e) === col(ePrefix + e))
-    // obs time was cast to double at ingress; compare in double space
-    // (epoch micros fit double's 53-bit mantissa, so the cast is exact)
-    val lo = wStartCol.map(c =>
-      (if (includeStart) asDouble(windows, c) <= col(TCol)
-       else asDouble(windows, c) < col(TCol)) &&
-        notNaN(windows, c))
-    val hi = wStopCol.map(c =>
-      (if (includeStop) col(TCol) <= asDouble(windows, c)
-       else col(TCol) < asDouble(windows, c)) &&
-        notNaN(windows, c))
-    val cond = (keyCond.toSeq ++ lo ++ hi).reduce(_ && _)
-
-    val joined = w0
-      .select((col(Wid) +: (entityCol.map(col).toSeq ++
-        wStartCol.map(col) ++ wStopCol.map(col))): _*)
-      .join(obsR, cond, "inner")
-      .select(col(Wid), col(Attr), col(TCol), col(VCol))
+    val (w0, windowedObs) = windowed(obs, windows, timeCol, valueCol, entityCol,
+      attrCol, wStartCol, wStopCol, includeStart, includeStop,
+      attributes, "", asDouble)
+    val joined = windowedObs.select(col(Wid), col(Attr).cast("string"), col(TCol),
+      coalesce(col(VCol).cast("double"), lit(Double.NaN)))
 
     implicit val encIn: Encoder[(Long, String, Double, Double)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.STRING,

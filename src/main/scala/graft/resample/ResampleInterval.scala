@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
   */
 object ResampleInterval {
 
-  private val Wid = "__graft_wid"
+  import WindowPivot.{Attr, Wid, notNaN}
 
   /** Cast a (numeric | date | timestamp) endpoint to a double "metric" for
     * duration ratios; timestamps via microseconds (testdata is ms-precision,
@@ -91,7 +91,8 @@ object ResampleInterval {
     val attrs: Seq[String] = attributes.getOrElse {
       attrCol match {
         case Some(a) =>
-          val inferred = df.select(a).distinct()
+          // a null attribute is no output column: its rows fail `isin`
+          val inferred = df.select(a).where(col(a).isNotNull).distinct()
             .limit(MaxInferredAttrs + 1).collect()
           require(inferred.length <= MaxInferredAttrs,
             s"resample_interval inferred more than $MaxInferredAttrs " +
@@ -104,14 +105,6 @@ object ResampleInterval {
       }
     }
 
-    // NaN sorts above +Inf in Spark, so NaN endpoints would pass the
-    // range conjuncts null fails — treat NaN as NA (pandas isna)
-    def notNaN(df0: DataFrame, c: String): Column =
-      df0.schema(c).dataType match {
-        case DoubleType | FloatType => !isnan(col(c))
-        case _                      => lit(true)
-      }
-
     // ── filter observations (resampling.py:603-616) ─────────────────────
     val obsValid0 = Seq(
       Some(col(valueCol).isNotNull && !isnan(col(valueCol).cast(DoubleType))),
@@ -122,11 +115,11 @@ object ResampleInterval {
     ).flatten.reduce(_ && _)
     val obs = df.filter(obsValid0)
 
-    val w0 = windows.withColumn(Wid, monotonically_increasing_id())
+    val w0 = WindowPivot.withId(windows)
 
     // Rename obs columns to avoid ambiguity.
     val oPrefix = "__graft_o_"
-    val obsR = obs.columns.foldLeft(obs)((d, c) => d.withColumnRenamed(c, oPrefix + c))
+    val obsR = obs.toDF(obs.columns.toSeq.map(oPrefix + _): _*)
     def o(c: String): Column = col(oPrefix + c)
 
     // ── join: entity equality + closed overlap; invalid windows match
@@ -189,17 +182,9 @@ object ResampleInterval {
     // ── aggregate: partial+final hash agg on (wid, attr), then pivot by
     //    conditional aggregation in a cheap second pass on wid ──────────
     val perAttr = joined
-      .groupBy(col(Wid), attrExpr.as("__graft_attr"))
+      .groupBy(col(Wid), attrExpr.as(Attr))
       .agg(sum(contribution).as("__graft_sum"))
-
-    val pivotCols = attrs.map { a =>
-      max(when(col("__graft_attr") === a, col("__graft_sum"))).as(a)
-    }
-    val pivoted = perAttr.groupBy(col(Wid)).agg(pivotCols.head, pivotCols.tail: _*)
-
-    val out = w0.join(pivoted, Seq(Wid), "left")
-    val filled = attrs.foldLeft(out)((d, a) =>
-      d.withColumn(a, coalesce(col(a), lit(0.0))))
-    filled.drop(Wid)
+    WindowPivot(w0, perAttr,
+      attrs.map(a => WindowPivot.Cell(a, a, "__graft_sum", coalesce(_, lit(0.0)))))
   }
 }

@@ -100,6 +100,32 @@ class JobBudgetSpec extends SparkSuite {
       orders.select(col("day"), (col("day") + 3).as("stop")), "day", Some("stop")))
   }
 
+  // each: the windows' broadcast into the observation join, the map jobs
+  // of the (window, attribute), pivot and windows shuffles, the pivot's
+  // broadcast back onto the windows (AQE) and the result; inferred
+  // attributes add the distinct's map job and its collect
+  test("resamplers: job budgets and no persisted RDD left") {
+    val windows = spark.range(600).select((col("id") % 300).as("e"),
+      (col("id") / 300 * 450).cast("long").as("ws"))
+      .withColumn("wt", col("ws") + 450)
+    val obs = orders.select(col("ckey").as("e"), col("day").as("t"),
+      col("flag").as("attr"), (col("okey") % 13).cast("double").as("v"))
+    budget("resampleEav, every family", 6)(Ops.resampleEav(obs, windows,
+      agg = Map(
+        "A" -> Seq("mean", "p50", "mad", "count", "mode", "mode_count", "r0", "r-1", "t0"),
+        "N" -> Seq("sum", "nunique", "mode")),
+      timeCol = "t", valueCol = "v", entityCol = Some("e"), attrCol = Some("attr"),
+      wStartCol = Some("ws"), wStopCol = Some("wt"),
+      customAgg = Map("R" -> Seq("tmax" -> graft.resample.CustomAgg.timeOfMax))))
+    val intervals = obs.withColumn("stop", col("t") + 30)
+    def resampleInterval(attributes: Option[Seq[String]]) = Ops.resampleInterval(
+      intervals, windows, "v", entityCol = Some("e"), startCol = Some("t"),
+      stopCol = Some("stop"), attrCol = Some("attr"), attributes = attributes,
+      wStartCol = Some("ws"), wStopCol = Some("wt"))
+    budget("resampleInterval", 6)(resampleInterval(Some(Seq("A", "N", "R"))))
+    budget("resampleInterval, inferred attributes", 8)(resampleInterval(None))
+  }
+
   // write, append: the dimension probe, the repartition's map job and the
   // write; compact: the parquet schema read, the repartition's map job
   // and the write; search: the probe collect, the schema read, the

@@ -40,6 +40,19 @@ class PlanSpecs extends SparkSuite {
     assert(!p.contains("ObjectHashAggregate"), "percentile fell back to object agg")
   }
 
+  private lazy val resampleEavQueries: Seq[String] =
+    SparkEntry.queries.keys.filter(_.startsWith("q_resample_eav_")).toSeq.sorted
+
+  test("the other resample_eav queries stay out of object-hash aggregation") {
+    for (q <- resampleEavQueries if q != "q_resample_eav_std")
+      assert(!plan(q).contains("ObjectHashAggregate"), s"$q fell back to object agg")
+  }
+
+  test("resample_eav aggregates once per (window, attribute): no full-outer merge") {
+    for (q <- resampleEavQueries)
+      assert(!plan(q).contains("FullOuter"), s"$q merges aggregation families")
+  }
+
   test("keyless binned join runs as an equi-join on the bin") {
     val p = plan("q_interval_binned")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)

@@ -316,6 +316,21 @@ class ResampleSpecs extends SparkSuite {
     assert(e.getMessage.contains("attributes"))
   }
 
+  test("resample_interval: attribute inference skips a null attribute") {
+    val df = Seq[(Long, Double, Double, Double, String)](
+      (1L, 0.0, 2.0, 8.0, "x"), (1L, 1.0, 3.0, 4.0, "y"),
+      (1L, 0.0, 1.0, 5.0, null)).toDF("e", "a", "b", "v", "attr")
+    val w = Seq((1L, 0.0, 10.0), (2L, 0.0, 10.0)).toDF("e", "ws", "wt")
+    def run(attributes: Option[Seq[String]]) = ResampleInterval(
+      df, w, valueCol = "v", entityCol = Some("e"),
+      startCol = Some("a"), stopCol = Some("b"), attrCol = Some("attr"),
+      attributes = attributes, wStartCol = Some("ws"), wStopCol = Some("wt"))
+    val inferred = run(None)
+    assert(inferred.columns.toSeq == Seq("e", "ws", "wt", "x", "y"))
+    assert(inferred.orderBy("e").collect().toSeq ==
+      run(Some(Seq("x", "y"))).orderBy("e").collect().toSeq)
+  }
+
   test("make_windows: start+duration, anchor+rel, stop−duration") {
     val df = Seq((1L, 10.0), (2L, 20.0)).toDF("e", "x")
     val w1 = MakeWindows(entity = Some(col("e")), start = Some(col("x")),
